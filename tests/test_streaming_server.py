@@ -1,5 +1,6 @@
 """Structured Streaming batch-parity + HTTP server + JSON envelope tests."""
 
+import http.client
 import json
 import threading
 import urllib.error
@@ -279,6 +280,53 @@ def test_server_errors(server):
 
     st, _ = _get(f"{server}/nope")
     assert st == 404
+
+
+def _raw(url, data=None, headers=None):
+    """(status, Content-Length header, body bytes) of one request."""
+    req = urllib.request.Request(url, data=data, headers=headers or {})
+    try:
+        with urllib.request.urlopen(req, timeout=120) as r:
+            return r.status, r.headers["Content-Length"], r.read()
+    except urllib.error.HTTPError as e:
+        return e.code, e.headers["Content-Length"], e.read()
+
+
+def test_server_cache_hit_bytes_identical(server):
+    q = urllib.parse.quote('click{user_id="2"}')
+    url = f"{server}/api/v1/query_range?query={q}&start=1704067200&end=1704068200&step=15s"
+    first = _raw(url)
+    again = _raw(url)
+    assert first[0] == again[0] == 200
+    assert again[2] == first[2]
+    assert int(again[1]) == len(again[2])
+    assert again[2].startswith(b'{"status": "success"')
+
+
+def test_server_malformed_post_body_is_400(server):
+    url = f"{server}/api/v1/query_range"
+    for body in (b"{bad", b"[1,2]"):
+        st, _len, raw = _raw(url, data=body, headers={"Content-Type": "application/json"})
+        assert st == 400 and json.loads(raw)["status"] == "error"
+    # a non-integer Content-Length gets the same answer
+    conn = http.client.HTTPConnection(urllib.parse.urlparse(server).netloc, timeout=120)
+    conn.putrequest("POST", "/api/v1/query_range")
+    conn.putheader("Content-Length", "ten")
+    conn.endheaders()
+    resp = conn.getresponse()
+    assert resp.status == 400 and json.loads(resp.read())["status"] == "error"
+    conn.close()
+    # the server stays up and still answers a well-formed POST
+    good = json.dumps({"query": 'click{user_id="1"}', "start": 1704067200,
+                       "end": 1704067500, "step": 15}).encode()
+    st, _len, raw = _raw(url, data=good, headers={"Content-Type": "application/json"})
+    assert st == 200 and json.loads(raw)["status"] == "success"
+
+
+def test_server_root_count_is_stable(server):
+    a = _get(f"{server}/")
+    b = _get(f"{server}/")
+    assert a == b and a[0] == 200 and a[1]["series"] == 75
 
 
 def test_streaming_near_dedup(spark, tmp_path):
