@@ -48,16 +48,33 @@ def with_series_key(df: DataFrame) -> DataFrame:
     return df.withColumn(SERIES_KEY, series_key_col())
 
 
+def series_labels_json(labels: Column) -> Column:
+    """The labels half of series identity: :func:`canonical_labels_json`
+    with a NULL map read as the empty map, so it keys as ``{}``. Without it
+    a NULL-labels series has a NULL key: every such series, whatever its
+    name, shares one window partition, and a key equi-join drops its
+    samples. The map is coalesced, not the JSON string: on a non-nullable
+    ``labels`` column the optimizer folds the coalesce away, so frames that
+    cannot hold NULL labels keep the plans they had without it."""
+    empty = F.map_from_arrays(
+        F.array().cast("array<string>"), F.array().cast("array<string>")
+    )
+    return canonical_labels_json(F.coalesce(labels, empty))
+
+
 def series_key_str(name: Column | None = None, labels: Column | None = None) -> Column:
     """Canonical STRING series identity.
 
     Needed because Spark forbids MAP columns in window partitioning, set ops,
     joins, and hash functions (probed on Spark 4.1: only groupBy accepts
     maps) — so every per-series operator keys on this string instead of the
-    raw (name, labels) pair.
+    raw (name, labels) pair. NULL labels key as the empty label set (see
+    :func:`series_labels_json`). Known degenerate limitation: a metric
+    literally named U+0000 shares a key with a NULL-named series of the
+    same labels — unreachable from any real ingest path.
     """
     name = F.col("name") if name is None else name
     labels = F.col("labels") if labels is None else labels
     return F.concat(
-        F.coalesce(name, F.lit("\u0000")), F.lit("|"), canonical_labels_json(labels)
+        F.coalesce(name, F.lit("\u0000")), F.lit("|"), series_labels_json(labels)
     )

@@ -70,22 +70,16 @@ Write (batch and streaming)
     job: executor tasks stream their Arrow batches into one parquet
     file each (stats measured on the same pass that writes the bytes;
     NULL/NaN keys fail the task so nothing commits), and the driver
-    publishes append/overwrite manifests through the same protocol as
-    ``snapshot_write`` — O_CREAT|O_EXCL atomic create, junk-slot
-    skipping, append rebase on a moved tip — so Python-committed and
-    JVM-committed versions interleave safely on one store. The
-    streaming sink appends one commit per micro-batch; option
-    ``txn_app_id`` rides the store's Delta-style txn marker keyed by
-    the batch id, making redelivered batches no-ops (exactly-once
-    output). Local/file: stores only — the JVM ``snapshot_write``
-    covers Hadoop filesystems. Cross-ENGINE concurrent writers keep the
-    store's documented local-FS replace-rename caveat (see
-    ``snapshot_store._try_commit``): the Python side's O_EXCL create is
-    atomic, but a JVM writer's POSIX rename can still replace a
-    just-published same-version manifest inside the microsecond
-    exists→rename window — the same residual window two JVM writers
-    have. Single-application use (one driver issuing commits in
-    sequence, the normal shape) never enters the window.
+    publishes append/overwrite manifests through ``manifest_log`` — the
+    one commit protocol ``snapshot_write`` uses too, with the same
+    create primitive per scheme — so Python-committed and JVM-committed
+    versions interleave safely on one store. Appends are schema-gated
+    before any task writes and again on every parent the commit lands
+    on, with the writer's own ``merge_schema`` option. The streaming
+    sink appends one commit per micro-batch; option ``txn_app_id`` rides
+    the store's Delta-style txn marker keyed by the batch id, making
+    redelivered batches no-ops (exactly-once output). Local/file: stores
+    only — the JVM ``snapshot_write`` covers Hadoop filesystems.
 
 Scale notes: planning reads only the JSON manifests (driver-side,
 O(files) smallness); executors touch exactly the surviving parquet
@@ -102,7 +96,6 @@ documents.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Iterator
 
@@ -125,74 +118,24 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-_SNAP_DIR = "_snapshots"
+from prometheus_parquet_server_spark.sources.manifest_log import (
+    CommitBackend,
+    _as_of,
+    _backend_for,
+    _local_path,
+    _name_overlaps,
+    _publish,
+    _read_manifest,
+    _resolve_tip,
+    _ts_overlaps,
+    _validated_append_schema,
+    register_commit_backend,  # noqa: F401 — public entry point, re-exported
+)
 
 # ---------------------------------------------------------------------------
-# Spark-free manifest access. DataSource planning runs in a Python worker
-# process with no JVM handle, so the Hadoop-FS helpers in snapshot_store
-# are unusable here; local (and file:) URIs go through plain os/open,
-# anything else through pyarrow.fs (S3/HDFS/GCS support rides pyarrow's
-# own bindings when present).
+# Conditional-put bindings of the manifest commit primitive
+# (manifest_log.CommitBackend), registered per URI scheme.
 # ---------------------------------------------------------------------------
-
-
-def _local_path(uri: str) -> str | None:
-    """file:/x, file:///x, or a bare path → the POSIX path; None when the
-    URI needs a non-local filesystem."""
-    if "://" not in uri and not uri.startswith("file:"):
-        return uri
-    if uri.startswith("file:"):
-        rest = uri[len("file:") :]
-        return "/" + rest.lstrip("/")
-    return None
-
-
-class CommitBackend:
-    """Object-store commit primitive for the Python DS manifest layer.
-
-    A snapshot commit is one atomic "create this manifest slot unless it
-    already exists". Locally that is ``O_CREAT|O_EXCL``; object stores
-    need a CONDITIONAL PUT — S3 ``If-None-Match: *`` (a racing put gets
-    HTTP 412), GCS ``ifGenerationMatch=0`` (412), ABS ``If-None-Match: *``
-    (409/412). Register an implementation per scheme with
-    :func:`register_commit_backend` and the whole manifest protocol
-    (list → read → exclusive-create with rebase-on-loss) runs against
-    that store; everything above the primitive is backend-agnostic.
-
-    ``create_exclusive`` MUST be atomic create-if-absent: return True on
-    the win, False when the key already exists (the 412/409 outcome) —
-    never overwrite. ``list_names``/``read_bytes`` are plain listing and
-    GET (reads may also ride pyarrow.fs; the backend overrides them so a
-    fake or SDK-native store works end-to-end)."""
-
-    def list_names(self, dir_uri: str) -> list[str]:  # pragma: no cover
-        raise NotImplementedError
-
-    def read_bytes(self, uri: str) -> bytes:  # pragma: no cover
-        raise NotImplementedError
-
-    def create_exclusive(self, uri: str, payload: bytes) -> bool:  # pragma: no cover
-        raise NotImplementedError
-
-
-#: scheme → CommitBackend; consulted before pyarrow.fs for every
-#: manifest operation, making conditional-put object-store commits a
-#: registration away (boto3's put_object(..., IfNoneMatch="*") wrapped
-#: in a 3-method class) without touching the protocol above it
-_COMMIT_BACKENDS: dict[str, CommitBackend] = {}
-
-
-def register_commit_backend(scheme: str, backend: CommitBackend) -> None:
-    """Install the manifest commit primitive for ``scheme`` (e.g. "s3").
-    Local ``file:``/bare paths never consult the registry — their O_EXCL
-    behavior is unchanged."""
-    _COMMIT_BACKENDS[scheme] = backend
-
-
-def _backend_for(uri: str) -> CommitBackend | None:
-    if "://" not in uri:
-        return None
-    return _COMMIT_BACKENDS.get(uri.split("://", 1)[0])
 
 
 class S3CommitBackend(CommitBackend):
@@ -293,10 +236,10 @@ class S3CommitBackend(CommitBackend):
                     # attempt durably landed while the response was lost
                     # (boto3 auto-retries 5xx internally, so the ambiguous
                     # first attempt can be invisible to us). Answering
-                    # False for our own commit would make _publish_manifest
+                    # False for our own commit would make the commit loop
                     # rebase onto itself and double-register every file, so
                     # disambiguate by reading the slot back: the payload
-                    # embeds the writer's unique nonce (_publish_manifest's
+                    # embeds the writer's unique nonce (manifest_log._try_commit's
                     # _writer uuid), byte-equality ⇒ the slot is OURS.
                     try:
                         return self.read_bytes(uri) == payload
@@ -354,7 +297,7 @@ class GCSCommitBackend(CommitBackend):
     manifest embeds a unique writer nonce): a create whose response was
     lost to a 503 has durably LANDED, and its retry's 412 would
     otherwise misreport the writer's own commit as a lost race —
-    _publish_manifest would rebase onto itself and double-register
+    the commit loop would rebase onto itself and double-register
     every file. Reads and listings retry the same transient codes with
     the same bound: the commit protocol treats an unreadable manifest
     slot as torn junk to skip, so an unretried transient 503 on a LIVE
@@ -583,90 +526,6 @@ class ABSCommitBackend(CommitBackend):
             raise
 
 
-def _list_versions(root: str) -> list[int]:
-    snap = f"{root}/{_SNAP_DIR}"
-    lp = _local_path(snap)
-    be = _backend_for(snap)
-    if lp is not None:
-        try:
-            names = os.listdir(lp)
-        except FileNotFoundError:
-            return []
-    elif be is not None:
-        names = be.list_names(snap)
-    else:
-        from pyarrow import fs as pafs
-
-        afs, p = pafs.FileSystem.from_uri(snap)
-        sel = pafs.FileSelector(p, allow_not_found=True)
-        names = [fi.base_name for fi in afs.get_file_info(sel)]
-    out = []
-    for base in names:
-        if base.startswith("v") and base.endswith(".json"):
-            try:
-                out.append(int(base[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _read_manifest(root: str, version: int) -> dict:
-    path = f"{root}/{_SNAP_DIR}/v{version:010d}.json"
-    lp = _local_path(path)
-    if lp is not None:
-        with open(lp, "rb") as fh:
-            return json.loads(fh.read().decode("utf-8"))
-    be = _backend_for(path)
-    if be is not None:
-        return json.loads(be.read_bytes(path).decode("utf-8"))
-    from pyarrow import fs as pafs
-
-    afs, p = pafs.FileSystem.from_uri(path)
-    with afs.open_input_stream(p) as stream:
-        return json.loads(stream.read().decode("utf-8"))
-
-
-def _create_manifest_exclusive(path: str, payload: bytes) -> bool:
-    """The commit primitive: atomically create ``path`` with ``payload``
-    unless the slot is already taken. True = won the slot; False = a
-    racer holds it (caller re-resolves the tip and retries). Local stores
-    use O_CREAT|O_EXCL; other schemes require a registered
-    :class:`CommitBackend` (conditional put) — plain pyarrow.fs has no
-    atomic create-if-absent, so committing through it would reintroduce
-    the replace-rename race the local path was built to avoid."""
-    lp = _local_path(path)
-    if lp is not None:
-        os.makedirs(os.path.dirname(lp), exist_ok=True)
-        try:
-            fd = os.open(lp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            return False
-        with os.fdopen(fd, "wb") as fh:
-            fh.write(payload)
-        return True
-    be = _backend_for(path)
-    if be is None:
-        raise NotImplementedError(
-            f"pps_snapshot commit to {path.split('://', 1)[0]}:// needs an "
-            f"atomic create-if-absent; register a CommitBackend "
-            f"(register_commit_backend) wrapping the store's conditional "
-            f"put (S3 If-None-Match:*, GCS ifGenerationMatch=0, ABS "
-            f"If-None-Match:* / overwrite=False)"
-        )
-    return be.create_exclusive(path, payload)
-
-
-def _resolve_tip(root: str) -> tuple[int | None, dict | None]:
-    """(version, manifest) of the highest READABLE version — same
-    torn-manifest tolerance as snapshot_store._resolve_tip."""
-    for v in reversed(_list_versions(root)):
-        try:
-            return v, _read_manifest(root, v)
-        except Exception:
-            continue
-    return None, None
-
-
 def _resolve_batch_manifest(options) -> dict:
     """The manifest a batch read plans against: ``version`` (exact),
     ``timestamp_as_of`` (epoch seconds — the snapshot_as_of rule: highest
@@ -683,41 +542,18 @@ def _resolve_batch_manifest(options) -> dict:
             "pps_snapshot: version and timestamp_as_of are mutually "
             "exclusive time-travel options"
         )
+    be = _backend_for(root)
     if v is not None:
-        return _read_manifest(root, int(v))
+        return _read_manifest(be, root, int(v))
     if ts is not None:
-        ts = float(ts)
-        for cand in reversed(_list_versions(root)):
-            try:
-                m = _read_manifest(root, cand)
-            except Exception:
-                continue
-            if m.get("committed_at", float("-inf")) <= ts:
-                return m
-        raise FileNotFoundError(
-            f"no snapshot of {root} existed at epoch {ts}"
-        )
-    _, m = _resolve_tip(root)
+        _, m = _as_of(be, root, float(ts))
+        if m is None:
+            raise FileNotFoundError(f"no snapshot of {root} existed at epoch {ts}")
+        return m
+    _, m = _resolve_tip(be, root)
     if m is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
     return m
-
-
-# Overlap predicates mirror snapshot_store._name_overlaps/_ts_overlaps:
-# null stats always intersect (read-and-filter beats a wedged plan).
-
-
-def _name_overlaps(f: dict, names) -> bool:
-    if f.get("min_name") is None or f.get("max_name") is None:
-        return True
-    return any(f["min_name"] <= n <= f["max_name"] for n in names)
-
-
-def _ts_overlaps(f: dict, lo: float, hi: float) -> bool:
-    mn, mx = f.get("min_ts"), f.get("max_ts")
-    if mn is None or mx is None:
-        return True
-    return not (mx < lo or mn > hi)
 
 
 def _prune(files: list[dict], names, ts_lo: float, ts_hi: float) -> list[dict]:
@@ -866,11 +702,14 @@ class SnapshotStreamReader(DataSourceStreamReader):
         if self._starting is None:
             return {"version": 0}  # replay from v1: first batch = table
         if str(self._starting).lower() == "latest":
-            return {"version": _resolve_tip(self._root)[0] or 0}
+            return {"version": self._tip()}
         return {"version": max(0, int(self._starting) - 1)}
 
+    def _tip(self) -> int:
+        return _resolve_tip(_backend_for(self._root), self._root)[0] or 0
+
     def latestOffset(self) -> dict:
-        tip = _resolve_tip(self._root)[0] or 0
+        tip = self._tip()
         if not self._max_files or self._cursor is None:
             # Unbounded — or the FIRST trigger after (re)start. Spark asks
             # for the latest offset before the source ever learns the
@@ -907,7 +746,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
         if cached is not None:
             return cached
         try:
-            m = _read_manifest(self._root, v)
+            m = _read_manifest(_backend_for(self._root), self._root, v)
         except FileNotFoundError as e:
             # a MISSING manifest is vacuumed history under a lagging
             # stream — silent skip here would be silent data loss
@@ -941,7 +780,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
             self._delta_cache[v] = delta
             return delta
         try:
-            pm = _read_manifest(self._root, parent)
+            pm = _read_manifest(_backend_for(self._root), self._root, parent)
         except Exception as e:
             raise RuntimeError(
                 f"pps_snapshot stream: parent manifest v{parent} of v{v} "
@@ -983,9 +822,8 @@ class SnapshotStreamReader(DataSourceStreamReader):
 # Write path. Executors stream their Arrow batches straight into one
 # parquet file each under a fresh tx dir (no shuffle, no JVM hop back);
 # the driver's commit() assembles the per-file stats the tasks measured
-# into a manifest and publishes it with the SAME protocol as
-# snapshot_store._try_commit, so Python-written and JVM-written commits
-# interleave safely on one store. Layout note: the Python writer keeps
+# into a manifest and publishes it through manifest_log, the protocol
+# snapshot_store commits through too. Layout note: the Python writer keeps
 # whatever partitioning the upstream plan produced — callers wanting the
 # store's name-clustered pruning layout should repartitionByRange("name",
 # "ts") first; stats stay exact either way, pruning just gets wider
@@ -1066,129 +904,6 @@ def _write_task(iterator, tx_uri: str, columns: list[str]) -> _FileCommit:
     )
 
 
-def _manifest_fs_path(root: str, version: int) -> str:
-    return f"{root}/{_SNAP_DIR}/v{version:010d}.json"
-
-
-def _slot_taken(root: str, version: int) -> bool:
-    """True when the manifest slot exists at all (readable OR torn)."""
-    path = _manifest_fs_path(root, version)
-    lp = _local_path(path)
-    if lp is not None:
-        return os.path.exists(lp)
-    be = _backend_for(path)
-    if be is not None:
-        try:
-            be.read_bytes(path)
-            return True
-        except Exception:
-            return False
-    from pyarrow import fs as pafs
-
-    afs, p = pafs.FileSystem.from_uri(path)
-    return afs.get_file_info(p).type != pafs.FileType.NotFound
-
-
-def _publish_manifest(
-    root: str,
-    operation: str,
-    schema_json: dict,
-    new_files: list[dict],
-    extra_props: dict | None,
-) -> int:
-    """Spark-free twin of snapshot_store's commit loop, safe to run from
-    the Python DS driver worker. Local stores get a strictly ATOMIC
-    create via O_CREAT|O_EXCL — no replace-rename race at all; a crash
-    mid-write leaves a torn file that readers and the JVM writer's
-    _target_version already skip as a junk slot. Appends rebase onto a
-    moved tip (an append's file list is valid against any parent);
-    overwrite raises on a race, like snapshot_write."""
-    import uuid as _uuid
-
-    writer_nonce = _uuid.uuid4().hex
-    first_parent = None
-    for attempt in range(10):
-        parent, parent_m = _resolve_tip(root)
-        if attempt == 0:
-            first_parent = parent
-        if operation == "overwrite" and parent != first_parent:
-            raise RuntimeError(
-                f"overwrite prepared against v{first_parent} but tip "
-                f"moved to v{parent}"
-            )
-        base, props = [], {}
-        if operation == "append" and parent_m is not None:
-            base = parent_m["files"]
-            props = dict(parent_m.get("properties") or {})
-            recorded = parent_m.get("schema")
-            if recorded is not None and recorded != schema_json:
-                # two legitimate ways to disagree with the tip's schema:
-                # (a) WE are the evolving writer (merge_schema append —
-                # ours is a type-matching superset): keep ours, the
-                # union, so the new column is recorded; (b) the tip
-                # evolved under us and ours is a type-matching SUBSET:
-                # adopt the parent's, else the evolved column would
-                # vanish from every pinned read. Anything else (type
-                # conflict, or both sides adding different columns in a
-                # race) raises — re-run against the new tip.
-                rec_f = {
-                    f["name"]: f["type"] for f in recorded["fields"]
-                }
-                own_f = {
-                    f["name"]: f["type"] for f in schema_json["fields"]
-                }
-                conflict = any(
-                    rec_f[n] != t for n, t in own_f.items() if n in rec_f
-                )
-                if conflict or (
-                    not set(own_f) <= set(rec_f)
-                    and not set(rec_f) <= set(own_f)
-                ):
-                    raise RuntimeError(
-                        "pps_snapshot append: the store's schema changed "
-                        "incompatibly during the write — re-run against "
-                        "the new tip"
-                    )
-                if set(own_f) <= set(rec_f):
-                    schema_json = recorded
-        if extra_props:
-            props.update(extra_props)
-        target = (parent or 0) + 1
-        while _slot_taken(root, target):
-            try:
-                _read_manifest(root, target)
-            except Exception:
-                target += 1  # junk slot (torn write) — skip it
-                continue
-            target = None  # readable slot above parent: tip moved
-            break
-        if target is None:
-            continue  # re-resolve and (for append) rebase
-        import time as _time
-
-        manifest = {
-            "version": target,
-            "parent": parent,
-            "operation": operation,
-            "schema": schema_json,
-            "files": base + new_files,
-            "_writer": writer_nonce,
-            # the wall-clock commit stamp snapshot_as_of/timestamp_as_of
-            # resolve against — omitting it would make Python-committed
-            # versions "infinitely old" to time travel
-            "committed_at": _time.time(),
-        }
-        if props:
-            manifest["properties"] = props
-        if not _create_manifest_exclusive(
-            _manifest_fs_path(root, target),
-            json.dumps(manifest).encode("utf-8"),
-        ):
-            continue  # lost the slot to a racer — retry on the new tip
-        return target
-    raise RuntimeError(f"lost 10 straight commit races on {root}")
-
-
 class SnapshotBatchWriter(DataSourceArrowWriter):
     def __init__(self, schema: StructType, options, overwrite: bool):
         import uuid as _uuid
@@ -1208,67 +923,19 @@ class SnapshotBatchWriter(DataSourceArrowWriter):
                     f"canonical '{required}' column, got {cols}"
                 )
         self._columns = cols
-        self._schema_json = json.loads(schema.json())
-        if not overwrite:
-            # append schema gate (the JVM _validated_append_schema twin):
-            # a type-conflicting append would commit and then fail every
-            # read of the store. Default is strict (same column set);
-            # option merge_schema=true admits ADDITIVE evolution like
-            # snapshot_write(merge_schema=True): new columns join the
-            # recorded schema (old files null-fill at read — _read_file
-            # already does), missing columns null-fill the new files, and
-            # type conflicts stay fatal in both modes. On a plain match
-            # the RECORDED schema stays the manifest's canonical order.
-            merge = str(options.get("merge_schema", "")).lower() in (
-                "true",
-                "1",
-            )
-            _, tip_m = _resolve_tip(self._root)
-            recorded = (tip_m or {}).get("schema")
-            if recorded is not None:
-                rec = StructType.fromJson(recorded)
-                # simpleString drops nullability at every nesting level,
-                # like the JVM gate — a map built from non-null literals
-                # must not conflict with its parquet-read twin
-                rec_types = {
-                    f.name: f.dataType.simpleString() for f in rec.fields
-                }
-                new_types = {
-                    f.name: f.dataType.simpleString() for f in schema.fields
-                }
-                conflicts = {
-                    n: (rec_types[n], t)
-                    for n, t in new_types.items()
-                    if n in rec_types and rec_types[n] != t
-                }
-                added = sorted(set(new_types) - set(rec_types))
-                missing = sorted(set(rec_types) - set(new_types))
-                if conflicts:
-                    raise ValueError(
-                        f"pps_snapshot append rejected: column type "
-                        f"conflict with the store's recorded schema "
-                        f"(recorded, batch): {conflicts} — fatal in "
-                        f"strict and merge_schema modes alike (a "
-                        f"committed conflict fails every later read)"
-                    )
-                if not merge and (added or missing):
-                    raise ValueError(
-                        f"pps_snapshot append rejected: column set "
-                        f"differs from the store's recorded schema "
-                        f"(added={added}, missing={missing}); the "
-                        f"Python writer is strict by default — pass "
-                        f".option('merge_schema', 'true') (or evolve "
-                        f"via snapshot_write(merge_schema=True))"
-                    )
-                if added:
-                    merged = StructType(
-                        list(rec.fields)
-                        + [f for f in schema.fields if f.name in set(added)]
-                    )
-                    self._schema_json = json.loads(merged.json())
-                else:
-                    self._schema_json = recorded
+        self._schema = schema
         self._overwrite = overwrite
+        # option merge_schema=true admits additive evolution, like
+        # snapshot_write(merge_schema=True); the default is strict
+        self._merge = str(options.get("merge_schema", "")).lower() in ("true", "1")
+        if not overwrite:
+            # gate the append before any task writes a file; the commit
+            # runs it again against the parent it actually lands on
+            root = self._root
+            _, tip_m = _resolve_tip(_backend_for(root), root)
+            _validated_append_schema(
+                (tip_m or {}).get("schema"), schema, self._merge
+            )
         self._tx = f"{self._root}/data/tx_{_uuid.uuid4().hex[:12]}"
 
     def write(self, iterator):
@@ -1290,25 +957,26 @@ class SnapshotBatchWriter(DataSourceArrowWriter):
         ]
 
     def _commit(self, new_files: list[dict], txn: tuple[str, int] | None):
-        extra_props = None
+        be, tip = _backend_for(self._root), None
         if txn is not None:
-            # pre-publish marker check suffices here: markers are
-            # lineage-scoped and Spark serializes a stream's micro-batch
-            # commits, so the same key is never raced (the JVM writer's
-            # per-rebase re-check guards its multi-writer append path)
-            key = f"txn_{txn[0]}"
-            _, parent_m = _resolve_tip(self._root)
-            recorded = ((parent_m or {}).get("properties") or {}).get(key)
+            # a redelivered micro-batch is a no-op that also drops the
+            # files it just wrote (the commit loop re-checks the marker
+            # on every parent it lands on)
+            tip = _resolve_tip(be, self._root)
+            props = (tip[1] or {}).get("properties") or {}
+            recorded = props.get(f"txn_{txn[0]}")
             if recorded is not None and int(txn[1]) <= int(recorded):
-                self._drop(new_files)  # redelivered micro-batch: no-op
+                self._drop(new_files)
                 return
-            extra_props = {key: int(txn[1])}
-        _publish_manifest(
+        _publish(
+            be,
             self._root,
             "overwrite" if self._overwrite else "append",
-            self._schema_json,
+            self._schema,
             new_files,
-            extra_props,
+            merge_schema=self._merge,
+            txn=txn,
+            tip=tip,
         )
 
     def commit(self, messages):

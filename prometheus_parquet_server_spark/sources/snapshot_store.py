@@ -26,14 +26,20 @@ usually touches one file per commit). The recorded schema makes a
 legitimately EMPTY snapshot (everything expired / empty overwrite)
 readable as an empty frame instead of an error.
 
-Concurrency: a manifest is staged as a dot-prefixed temp file (complete
-bytes, invisible to version listing) and published with exclusive-create
-semantics; two writers racing to version N+1 see exactly one winner.
-Appends retry against the new tip (their file list is valid under any
-parent); conflicting upserts/overwrites raise :class:`ConcurrentWriteError`
-for the caller to retry at the merge level (serializable semantics, no
-lost updates). Readers skip any unreadable version file (legacy torn
-writes) rather than wedging, and writers number PAST such junk.
+Concurrency: manifests are read and published by ``manifest_log``, the
+one Spark-free copy of the commit protocol, which the ``pps_snapshot``
+Python DataSource (``pyds``) commits through as well. Each scheme has one
+create primitive, shared by both engines: ``file:`` stores hard-link a
+complete temp file onto the slot, registered object stores use their
+conditional put, and other Hadoop schemes (``hdfs:``, ``s3a:``) use
+:class:`_HadoopCommitBackend`'s temp + rename + read-back. A slot never
+holds a partial manifest, and two writers racing to version N+1 see
+exactly one winner. Appends retry against the new tip (their file list is
+valid under any parent); conflicting upserts/overwrites raise
+:class:`ConcurrentWriteError` for the caller to retry at the merge level
+(serializable semantics, no lost updates). Readers skip any unreadable
+version file (legacy torn writes) rather than wedging, and writers number
+PAST such junk.
 
 Reference parity: same canonical long model as the swap store
 (``TimeSeriesCollection``, src/timeseries.rs:396-445); this is the sink
@@ -43,302 +49,144 @@ side scaled past the reference's single-node filesystem assumptions.
 from __future__ import annotations
 
 import json
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from prometheus_parquet_server_spark.model import series_key_str
+from prometheus_parquet_server_spark.sources.manifest_log import (
+    _COMMIT_BACKENDS,
+    _LOCAL,
+    SNAP_DIR,
+    CommitBackend,
+    ConcurrentWriteError,
+    _as_of,
+    _commit_on,
+    _list_versions,
+    _manifest_path,
+    _name_overlaps,
+    _publish,
+    _read_manifest,
+    _readable,
+    _resolve_tip,
+    _temp_for,
+    _ts_overlaps,
+    _validated_append_schema,
+)
 from prometheus_parquet_server_spark.sources.store import _StoreFS, read_store
 
-_SNAP_DIR = "_snapshots"
-_MAX_COMMIT_RETRIES = 10
-
-# Serializes the exists→rename→verify critical section for writers in THIS
-# process: on a replace-semantics filesystem (POSIX rename) two in-process
-# threads could otherwise both slip through the exists check. Cross-process
-# local-FS writers keep the (microsecond) documented caveat; HDFS
-# (rename-refuses-existing) and conditional-PUT object stores are safe
-# without it.
-import threading as _threading
-
-_COMMIT_LOCK = _threading.Lock()
+# Serializes the exists→rename→verify critical section of the Hadoop
+# backend for writers in THIS process: on a replace-semantics filesystem
+# two in-process threads could otherwise both slip through the exists
+# check. HDFS (rename refuses an existing destination) is safe without it.
+_COMMIT_LOCK = threading.Lock()
 
 
-class ConcurrentWriteError(RuntimeError):
-    """Another writer committed between this transaction's read and its
-    commit attempt, and the operation cannot be blindly rebased
-    (overwrite/upsert). Re-run the operation against the new tip."""
+class _HadoopCommitBackend(CommitBackend):
+    """The manifest commit primitive over the session's Hadoop
+    ``FileSystem`` (py4j, driver only), for schemes with neither a local
+    path nor a registered backend — ``hdfs:``, ``s3a:``, ``abfs:``.
 
+    ``create_exclusive`` writes the COMPLETE bytes to a dot-temp file and
+    renames it onto the slot, so a crash leaves ignorable temp junk, never
+    a torn ``vN.json``. On HDFS the rename refuses an existing destination
+    and decides the winner. Where rename REPLACES, the exists check under
+    :data:`_COMMIT_LOCK` decides between this process's writers, and a
+    read-back decides between processes: a writer whose bytes were
+    replaced sees a foreign payload and answers False (still exactly one
+    winner per version; the displaced writer retries)."""
 
-def _manifest_path(root: str, version: int) -> str:
-    return f"{root}/{_SNAP_DIR}/v{version:010d}.json"
+    def __init__(self, fs: _StoreFS):
+        self._fs = fs
 
+    def list_names(self, dir_uri: str) -> list[str]:
+        if not self._fs.exists(dir_uri):
+            return []
+        return [
+            str(st.getPath()).rsplit("/", 1)[-1]
+            for st in self._fs.fs.listStatus(self._fs.jpath(dir_uri))
+        ]
 
-def _list_versions(fs: _StoreFS, root: str) -> list[int]:
-    """Every version number with a PUBLISHED manifest file — readable or
-    not. Writers number past the max; readers resolve via
-    :func:`_resolve_tip`, which skips unreadable entries."""
-    snap = f"{root}/{_SNAP_DIR}"
-    if not fs.exists(snap):
-        return []
-    out = []
-    for st in fs.fs.listStatus(fs.jpath(snap)):
-        base = str(st.getPath()).rsplit("/", 1)[-1]
-        if base.startswith("v") and base.endswith(".json"):
-            try:
-                out.append(int(base[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _read_manifest(fs: _StoreFS, root: str, version: int) -> dict:
-    stream = fs.fs.open(fs.jpath(_manifest_path(root, version)))
-    try:
-        # commons-io is on Spark's classpath; a py4j byte[] comes back as
-        # Python bytes. (Reading into a Python bytearray would NOT work:
-        # py4j passes a copy to Java, so read(buf) can't fill it.)
-        data = bytes(fs._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        return json.loads(data.decode("utf-8"))
-    finally:
-        stream.close()
-
-
-_TIP_HINT = ".tip_hint"  # dot-prefixed: invisible to version listing
-
-
-def _write_tip_hint(fs: _StoreFS, root: str, version: int) -> None:
-    """Best-effort advisory tip pointer (the Delta `_last_checkpoint`
-    idea): written AFTER a successful commit, read by :func:`_resolve_tip`
-    to start probing at the hinted version instead of listing the whole
-    manifest directory. Purely an optimization — a missing, stale, or
-    corrupt hint falls back to the listing path, and a hint is only ever
-    written for a version whose manifest has already published, so
-    probing forward from it cannot skip the true tip (commit numbering is
-    contiguous above any published version). Failures are swallowed: the
-    hint must never fail a commit that already succeeded."""
-    try:
-        stream = fs.fs.create(fs.jpath(f"{root}/{_SNAP_DIR}/{_TIP_HINT}"), True)
+    def read_bytes(self, uri: str) -> bytes:
+        fs = self._fs
+        if not fs.exists(uri):
+            raise FileNotFoundError(uri)
+        stream = fs.fs.open(fs.jpath(uri))
         try:
-            stream.write(bytearray(str(version).encode("ascii")))
+            # commons-io is on Spark's classpath; a py4j byte[] comes back
+            # as Python bytes (a Python bytearray passed to read(buf) would
+            # not fill: py4j hands Java a copy)
+            return bytes(fs._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
         finally:
             stream.close()
-    except Exception:
-        pass
 
-
-def _read_tip_hint(fs: _StoreFS, root: str) -> int | None:
-    try:
-        stream = fs.fs.open(fs.jpath(f"{root}/{_SNAP_DIR}/{_TIP_HINT}"))
+    def replace_bytes(self, uri: str, payload: bytes) -> None:
+        stream = self._fs.fs.create(self._fs.jpath(uri), True)
         try:
-            data = bytes(
-                fs._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
+            stream.write(bytearray(payload))
         finally:
             stream.close()
-        v = int(data.decode("ascii").strip())
-        return v if v >= 1 else None
-    except Exception:
-        return None
 
-
-def _resolve_tip(fs: _StoreFS, root: str) -> tuple[int | None, dict | None]:
-    """(version, manifest) of the highest READABLE snapshot — a torn or
-    corrupt version file (possible only from pre-temp+rename writers or
-    external tampering) is skipped, not fatal, so one bad file can never
-    wedge every read and write of the store.
-
-    Fast path: the advisory :data:`_TIP_HINT` gives a published version to
-    probe FORWARD from (O(1 + commits-since-hint) exists-checks instead of
-    listing a manifest directory that can hold deep retained history).
-    Probing is sound because version numbers are contiguous above any
-    published manifest (_target_version takes the smallest free slot).
-    The walk back down from the probe top skips unreadable junk; if it
-    reaches below the hinted floor — or the hint is missing / stale /
-    corrupt / pointing at a vacuumed manifest — resolution falls back to
-    the exhaustive listing, so the hint can never change WHAT resolves,
-    only how fast."""
-    hint = _read_tip_hint(fs, root)
-    if hint is not None and fs.exists(_manifest_path(root, hint)):
-        top = hint
-        while fs.exists(_manifest_path(root, top + 1)):
-            top += 1
-        for v in range(top, hint - 1, -1):
+    def create_exclusive(self, uri: str, payload: bytes) -> bool:
+        fs = self._fs
+        tmp = _temp_for(uri)
+        self.replace_bytes(tmp, payload)
+        with _COMMIT_LOCK:
             try:
-                return v, _read_manifest(fs, root, v)
+                if fs.exists(uri) or not fs.fs.rename(fs.jpath(tmp), fs.jpath(uri)):
+                    fs.delete(tmp)
+                    return False
             except Exception:
-                continue
-        # every manifest from top down to the hinted floor is unreadable —
-        # resolve exhaustively below it
-    for v in reversed(_list_versions(fs, root)):
-        try:
-            return v, _read_manifest(fs, root, v)
-        except Exception:
-            continue
-    return None, None
-
-
-def _target_version(fs: _StoreFS, root: str, parent: int | None) -> int | None:
-    """The version this commit must land at, as a CAS against ``parent``:
-    the smallest free number above the parent, skipping only UNREADABLE
-    junk slots (legacy torn writes). Returns None when a READABLE manifest
-    already occupies a slot above the parent — the tip moved, the caller
-    must re-resolve and rebuild its file list on the new tip. This
-    determinism is what makes the commit a compare-and-swap: two racers
-    that merged from the same parent compute the SAME target, so the
-    exclusive publish lets exactly one through, and the loser can never
-    'number past' the winner and silently drop its files."""
-    t = (parent or 0) + 1
-    while fs.exists(_manifest_path(root, t)):
-        if _readable(fs, root, t):
-            return None  # tip moved under us
-        t += 1  # junk slot — skip deterministically
-    return t
-
-
-def _try_commit(fs: _StoreFS, root: str, manifest: dict) -> bool:
-    """Publish a manifest; returns False if the version was lost to a
-    racing writer. Two layers:
-
-    - the COMPLETE bytes are first written to a dot-prefixed temp file
-      (invisible to version listing), then renamed to the final name — a
-      crash can no longer leave a torn ``vNNN.json``, only ignorable
-      temp junk;
-    - a writer nonce is verified by reading the final file back. On HDFS
-      (rename fails onto an existing destination) and conditional-PUT
-      object stores the rename alone decides the winner; on the LOCAL
-      filesystem POSIX rename silently REPLACES, so same-version racers
-      are instead decided by the read-back — the clobbered writer sees a
-      foreign nonce, returns False, and retries at the next version.
-      Residual local-FS caveat: a loser's rename landing between the
-      winner's rename and verify makes the LOSER the survivor — still
-      exactly one winner per version, no torn bytes, no lost append
-      (the displaced writer fails its verify and retries).
-    """
-    import time as _time
-
-    manifest = dict(
-        manifest, _writer=uuid.uuid4().hex, committed_at=_time.time()
-    )
-    final = fs.jpath(_manifest_path(root, manifest["version"]))
-    tmp = fs.jpath(
-        f"{root}/{_SNAP_DIR}/.tmp_v{manifest['version']:010d}_{manifest['_writer'][:8]}.json"
-    )
-    fs.fs.mkdirs(fs.jpath(f"{root}/{_SNAP_DIR}"))
-    stream = fs.fs.create(tmp, True)
-    try:
-        stream.write(bytearray(json.dumps(manifest).encode("utf-8")))
-    finally:
-        stream.close()
-    with _COMMIT_LOCK:
-        try:
-            if fs.fs.exists(final) or not fs.fs.rename(tmp, final):
                 fs.delete(tmp)
                 return False
-        except Exception:
-            fs.delete(tmp)
-            return False
-        try:
-            back = _read_manifest(fs, root, manifest["version"])
-        except Exception as e:
-            # the rename SUCCEEDED but the verify read failed: the commit
-            # may well be live. Returning False here would make an append
-            # retry and double-apply its own files on top of its own
-            # commit — an ambiguous commit must fail loudly instead.
-            raise IOError(
-                f"commit v{manifest['version']} published but unverifiable "
-                f"({e}) — inspect the store before retrying"
-            ) from e
-        won = back.get("_writer") == manifest["_writer"]
-        if won:
-            _write_tip_hint(fs, root, manifest["version"])
-        return won
+            try:
+                return self.read_bytes(uri) == payload
+            except Exception as e:
+                # the rename SUCCEEDED but the verify read failed: the
+                # commit may well be live, and answering False would make
+                # an append rebase onto its own commit and double-apply
+                # its files — an ambiguous commit must fail loudly
+                raise IOError(
+                    f"{uri} published but unverifiable ({e}) — inspect "
+                    f"the store before retrying"
+                ) from e
+
+
+def _log(spark: SparkSession, path: str) -> tuple[CommitBackend, str]:
+    """The commit backend and root of the store at ``path``. The root is
+    qualified through Hadoop first, so a bare path resolves the way
+    ``fs.defaultFS`` says; ``file:`` stores then share the local backend
+    with the ``pps_snapshot`` source."""
+    fs = _StoreFS(spark, path)
+    root = str(fs.fs.makeQualified(fs.root))
+    scheme = root.split(":", 1)[0]
+    if scheme == "file":
+        return _LOCAL, root
+    return _COMMIT_BACKENDS.get(scheme) or _HadoopCommitBackend(fs), root
 
 
 def _schema_json(df: DataFrame) -> dict:
     return json.loads(df.schema.json())
 
 
-def _validated_append_schema(
-    recorded: dict | None,
-    df: DataFrame,
-    merge_schema: bool,
-    evolution_hint: str = "pass merge_schema=True to evolve the schema additively",
-) -> dict:
-    """The manifest schema an APPEND must record, after validating the
-    incoming frame against the store's recorded schema. Without this
-    gate a type-conflicting append COMMITS and then every read of the
-    store fails on the parquet type mismatch — one dirty batch wedges
-    the table permanently (the schema sibling of the NULL-key write
-    rejection).
-
-    - a column present on both sides must have the SAME type (nullability
-      and metadata are not load-bearing and are ignored);
-    - strict mode (default) additionally requires the same column SET —
-      no new, no missing;
-    - ``merge_schema`` (the public Delta mergeSchema pattern) allows NEW
-      columns (recorded schema becomes the union; old files null-fill at
-      read) and MISSING ones (the new files null-fill instead), but a
-      type conflict stays fatal in both modes."""
-    from pyspark.sql import types as T
-
-    if recorded is None:
-        return _schema_json(df)  # pre-schema store: adopt the frame's
-    rec = T.StructType.fromJson(recorded)
-    # simpleString compares the TYPE SHAPE and drops nullability at every
-    # nesting level (StructField.nullable, array containsNull, map
-    # valueContainsNull) — a map<string,string> built from non-null
-    # literals must not conflict with the same map read back from
-    # parquet, where the value side is nullable
-    rec_types = {f.name: f.dataType.simpleString() for f in rec.fields}
-    new_types = {
-        f.name: f.dataType.simpleString() for f in df.schema.fields
-    }
-    conflicts = {
-        n: (rec_types[n], t)
-        for n, t in new_types.items()
-        if n in rec_types and rec_types[n] != t
-    }
-    if conflicts:
-        raise ValueError(
-            f"snapshot append rejected: column type conflict with the "
-            f"store's recorded schema (recorded, batch): {conflicts} — a "
-            f"committed conflict would fail every later read"
-        )
-    added = [n for n in new_types if n not in rec_types]
-    missing = [n for n in rec_types if n not in new_types]
-    if not merge_schema and (added or missing):
-        raise ValueError(
-            f"snapshot append rejected: column set differs from the "
-            f"store's recorded schema (added={added}, missing={missing}); "
-            f"{evolution_hint}"
-        )
-    if added:
-        merged = T.StructType(
-            list(rec.fields)
-            + [f for f in df.schema.fields if f.name in set(added)]
-        )
-        return json.loads(merged.json())
-    return recorded  # the store's field order stays canonical
-
-
 def snapshot_version(spark: SparkSession, path: str) -> int | None:
     """Highest readable committed version, or None for an uninitialized
     store."""
-    fs = _StoreFS(spark, path)
-    v, _ = _resolve_tip(fs, path)
+    be, root = _log(spark, path)
+    v, _ = _resolve_tip(be, root)
     return v
 
 
 def snapshot_history(spark: SparkSession, path: str) -> DataFrame:
     """(version, parent, operation, n_files, n_rows) per readable
     committed snapshot — the audit trail time travel reads."""
-    fs = _StoreFS(spark, path)
+    be, root = _log(spark, path)
     rows = []
-    for v in _list_versions(fs, path):
+    for v in _list_versions(be, root):
         try:
-            m = _read_manifest(fs, path, v)
+            m = _read_manifest(be, root, v)
         except Exception:
             continue  # legacy torn write — ignorable junk
         rows.append(
@@ -500,27 +348,6 @@ def _tx_manifest_entries(spark: SparkSession, path: str, tx: str) -> list[dict]:
     ]
 
 
-def _name_overlaps(f: dict, names) -> bool:
-    """Does a manifest file entry's name range intersect ``names``?
-    Null stats (a pre-guard manifest written before the NULL/NaN write
-    rejection, or external tooling) are treated as ALWAYS intersecting —
-    the file is read and row-filtered instead of wedging the plan with a
-    None comparison; correctness never depends on pruning."""
-    if f.get("min_name") is None or f.get("max_name") is None:
-        return True
-    return any(f["min_name"] <= n <= f["max_name"] for n in names)
-
-
-def _ts_overlaps(f: dict, lo: float, hi: float) -> bool:
-    """Ts-range analogue of :func:`_name_overlaps` (null-stat entries
-    always intersect; NaN stats fail both comparisons and also land on
-    the safe read-it side via the ``not``)."""
-    mn, mx = f.get("min_ts"), f.get("max_ts")
-    if mn is None or mx is None:
-        return True
-    return not (mx < lo or mn > hi)
-
-
 def _pinned_reader(spark: SparkSession, parent_m: dict | None):
     """A reader pinned to the manifest-recorded schema when one exists —
     every maintenance rewrite (upsert, merge, compact, expire) must read
@@ -613,12 +440,13 @@ def snapshot_write(
         if not app_id or "\n" in str(app_id):
             raise ValueError(f"txn app_id must be a non-empty line, got {app_id!r}")
         txn_key = f"txn_{app_id}"
-    fs = _StoreFS(spark, path)
+    be, root = _log(spark, path)
     # one tip resolve serves both layout inheritance and the commit's
     # expected-parent check — appends run per streaming micro-batch, so
     # a second directory listing + manifest read per call is real driver
     # I/O, not noise
-    expected, expected_m = _resolve_tip(fs, path)
+    tip = _resolve_tip(be, root)
+    expected, expected_m = tip
     if txn_key is not None and expected_m is not None:
         recorded = ((expected_m.get("properties") or {})).get(txn_key)
         if recorded is not None and int(txn[1]) <= int(recorded):
@@ -628,81 +456,20 @@ def snapshot_write(
     if mode == "append":
         # validate BEFORE writing data files — a rejected batch must not
         # leave a tx dir for vacuum to sweep
-        schema = _validated_append_schema(
-            (expected_m or {}).get("schema"), df, merge_schema
+        _validated_append_schema(
+            (expected_m or {}).get("schema"), df.schema, merge_schema
         )
-    else:
-        schema = _schema_json(df)
     new_files = _write_data_files(spark, path, df, time_chunk_s=time_chunk_s)
-    for attempt in range(_MAX_COMMIT_RETRIES):
-        parent, parent_m = (
-            (expected, expected_m) if attempt == 0 else _resolve_tip(fs, path)
-        )
-        if mode == "overwrite" and parent != expected:
-            raise ConcurrentWriteError(
-                f"overwrite prepared against v{expected} but tip moved to v{parent}"
-            )
-        if require_parent is not None and parent != require_parent:
-            raise ConcurrentWriteError(
-                f"append required parent v{require_parent} but tip is v{parent}"
-            )
-        base: list[dict] = []
-        if mode == "append" and parent is not None:
-            if parent_m is None:
-                parent_m = _read_manifest(fs, path, parent)
-            base = parent_m["files"]
-            if attempt > 0:
-                # a rebase lands on a DIFFERENT parent — its schema may
-                # have evolved since the pre-write validation
-                schema = _validated_append_schema(
-                    parent_m.get("schema"), df, merge_schema
-                )
-        target = _target_version(fs, path, parent)
-        if target is None:
-            continue  # tip moved between resolve and target — rebase
-        manifest = {
-            "version": target,
-            "parent": parent,
-            "operation": mode,
-            "schema": schema,
-            "files": base + new_files,
-        }
-        # properties travel with the store: appends inherit the parent's
-        # (an overwrite is a fresh start and drops them)
-        if mode == "append" and parent is not None:
-            _props = (parent_m or _read_manifest(fs, path, parent)).get("properties")
-            if _props:
-                manifest["properties"] = dict(_props)
-        if properties:
-            inherited = manifest.get("properties") or {}
-            conflicts = {
-                k: (inherited[k], v)
-                for k, v in properties.items()
-                if k in inherited and inherited[k] != v
-            }
-            if mode == "append" and conflicts:
-                raise ValueError(
-                    f"snapshot_write: properties conflict with the store's "
-                    f"recorded values (recorded, supplied): {conflicts}"
-                )
-            manifest["properties"] = {**inherited, **properties}
-        if time_chunk_s is not None:
-            manifest.setdefault("properties", {})["time_chunk_s"] = float(
-                time_chunk_s
-            )
-        if txn_key is not None:
-            # re-check against THIS parent: a rebase may have landed a newer
-            # marker (same-writer redelivery racing itself); ≤ means the
-            # batch already committed and the prepared files are orphans
-            # the next vacuum sweeps
-            recorded = (manifest.get("properties") or {}).get(txn_key)
-            if recorded is not None and int(txn[1]) <= int(recorded):
-                return parent
-            manifest.setdefault("properties", {})[txn_key] = int(txn[1])
-        if _try_commit(fs, path, manifest):
-            return manifest["version"]
-    raise ConcurrentWriteError(
-        f"lost {_MAX_COMMIT_RETRIES} straight commit races on {path}"
+    # a txn marker already recorded on a rebase parent means the batch
+    # committed meanwhile; the prepared files are orphans vacuum sweeps
+    return _publish(
+        be, root, mode, df.schema, new_files,
+        merge_schema=merge_schema,
+        properties=properties,
+        layout=None if time_chunk_s is None else {"time_chunk_s": float(time_chunk_s)},
+        txn=txn,
+        require_parent=require_parent,
+        tip=tip,
     )
 
 
@@ -720,13 +487,13 @@ def snapshot_read(
     The residual row-level filter is applied too, so the result is exact.
     An empty snapshot (everything expired, empty overwrite) returns an
     empty frame with the manifest-recorded schema."""
-    fs = _StoreFS(spark, path)
+    be, root = _log(spark, path)
     if version is None:
-        version, m = _resolve_tip(fs, path)
+        version, m = _resolve_tip(be, root)
         if version is None:
             raise FileNotFoundError(f"no committed snapshot under {path}")
     else:
-        m = _read_manifest(fs, path, version)
+        m = _read_manifest(be, root, version)
     files = m["files"]
     if names is not None:
         files = [f for f in files if _name_overlaps(f, names)]
@@ -769,7 +536,7 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
     cost is proportional to the touched data, not the store. A commit race
     raises :class:`ConcurrentWriteError` (the merge read a tip that moved;
     blind rebase could lose the racer's rows)."""
-    fs = _StoreFS(spark, path)
+    be, root = _log(spark, path)
     updates = updates.cache()
     try:
         distinct_names = [
@@ -786,7 +553,7 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
         names = sorted(distinct_names)
         if not names:
             return snapshot_version(spark, path) or 0
-        parent, parent_m = _resolve_tip(fs, path)
+        parent, parent_m = _resolve_tip(be, root)
         base_files: list[dict] = parent_m["files"] if parent_m else []
         touched = [f for f in base_files if _name_overlaps(f, names)]
         # set-of-paths membership: list `in` is O(files x touched) full-dict
@@ -798,7 +565,7 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
         # that dropped a store column would silently erase it from every
         # rewritten row of the touched files
         _validated_append_schema(
-            (parent_m or {}).get("schema"), updates, merge_schema=False
+            (parent_m or {}).get("schema"), updates.schema, merge_schema=False
         )
         merged = updates.withColumn("_prio", F.lit(0))
         if touched:
@@ -816,16 +583,8 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
         new_files = _write_data_files(
             spark, path, out, time_chunk_s=_inherited_chunk(parent_m)
         )
-        target = _target_version(fs, path, parent)
-        if target is None:
-            raise ConcurrentWriteError(
-                f"upsert prepared against v{parent} but the tip moved — "
-                f"re-run against the new tip"
-            )
         _props = (parent_m or {}).get("properties")
-        manifest = {
-            "version": target,
-            "parent": parent,
+        body = {
             "operation": "upsert",
             # most files carry over from the base, so the PARENT's schema
             # is the store's schema; recording the updates' schema would
@@ -836,13 +595,8 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
             "files": kept + new_files,
         }
         if _props:
-            manifest["properties"] = _props
-        if not _try_commit(fs, path, manifest):
-            raise ConcurrentWriteError(
-                f"upsert prepared against v{parent} but v{manifest['version']} "
-                f"already exists — re-run against the new tip"
-            )
-        return manifest["version"]
+            body["properties"] = _props
+        return _commit_on(be, root, (parent, parent_m), body)
     finally:
         updates.unpersist()
 
@@ -906,7 +660,7 @@ def snapshot_merge(
     overhead per commit and multiplies the files every later read-back
     opens. None keeps the adaptive default (unbounded stores).
     """
-    fs = _StoreFS(spark, path)
+    be, root = _log(spark, path)
     updates = updates.cache()
     try:
         distinct_names = [
@@ -926,7 +680,7 @@ def snapshot_merge(
                     f"{path} — nothing to commit and no version to return"
                 )
             return v
-        parent, parent_m = _resolve_tip(fs, path)
+        parent, parent_m = _resolve_tip(be, root)
         parent_props = (parent_m or {}).get("properties") or {}
         txn_key = None
         if txn is not None:
@@ -970,34 +724,21 @@ def snapshot_merge(
         # here (combine dropped or retyped a column) is the same
         # wedge/erasure hazard the append gate closes
         _validated_append_schema(
-            (parent_m or {}).get("schema"), out, merge_schema=False
+            (parent_m or {}).get("schema"), out.schema, merge_schema=False
         )
         new_files = _write_data_files(
             spark, path, out, time_chunk_s=_inherited_chunk(parent_m),
             num_partitions=num_partitions,
         )
-        target = _target_version(fs, path, parent)
-        if target is None:
-            raise ConcurrentWriteError(
-                f"merge prepared against v{parent} but the tip moved — "
-                f"re-run against the new tip"
-            )
-        manifest = {
-            "version": target,
-            "parent": parent,
+        body = {
             "operation": "merge",
             "schema": (parent_m.get("schema") if parent_m else None)
             or _schema_json(out),
             "files": kept + new_files,
         }
         if merged_props:
-            manifest["properties"] = merged_props
-        if not _try_commit(fs, path, manifest):
-            raise ConcurrentWriteError(
-                f"merge prepared against v{parent} but v{manifest['version']} "
-                f"already exists — re-run against the new tip"
-            )
-        return manifest["version"]
+            body["properties"] = merged_props
+        return _commit_on(be, root, (parent, parent_m), body)
     finally:
         updates.unpersist()
 
@@ -1030,13 +771,13 @@ def snapshot_stats(
 
     ``n_bytes``/``n_files`` count every predicate-INTERSECTING file (the
     I/O a real scan would plan), not just contained ones."""
-    fs = _StoreFS(spark, path)
+    be, root = _log(spark, path)
     if version is None:
-        version, m = _resolve_tip(fs, path)
+        version, m = _resolve_tip(be, root)
         if version is None:
             raise FileNotFoundError(f"no committed snapshot under {path}")
     else:
-        m = _read_manifest(fs, path, version)
+        m = _read_manifest(be, root, version)
     files = m["files"]
     if names is not None:
         files = [f for f in files if _name_overlaps(f, names)]
@@ -1108,11 +849,11 @@ def snapshot_properties(
     facts that travel with the store (e.g. a rollup store's ingest
     width). Inherited commit-to-commit by :func:`snapshot_merge`, which
     rejects conflicting re-declarations."""
-    fs = _StoreFS(spark, path)
+    be, root = _log(spark, path)
     if version is None:
-        _, m = _resolve_tip(fs, path)
+        _, m = _resolve_tip(be, root)
     else:
-        m = _read_manifest(fs, path, version)
+        m = _read_manifest(be, root, version)
     return (m or {}).get("properties") or {}
 
 
@@ -1132,8 +873,8 @@ def snapshot_compact(
     manifests without a recorded size are treated as small (rewritten
     once, gaining a size entry). Returns the new version, or None if
     there was nothing to compact."""
-    fs = _StoreFS(spark, path)
-    parent, parent_m = _resolve_tip(fs, path)
+    be, root = _log(spark, path)
+    parent, parent_m = _resolve_tip(be, root)
     if parent is None:
         return None
     base = parent_m["files"]
@@ -1163,25 +904,14 @@ def snapshot_compact(
         spark, path, df, time_chunk_s=_inherited_chunk(parent_m),
         num_partitions=n_out,
     )
-    target = _target_version(fs, path, parent)
-    if target is None:
-        raise ConcurrentWriteError(
-            f"compact prepared against v{parent} but the tip moved"
-        )
-    manifest = {
-        "version": target,
-        "parent": parent,
+    body = {
         "operation": "compact",
         "schema": parent_m.get("schema") or _schema_json(df),
         "files": kept + new_files,
     }
     if parent_m.get("properties"):
-        manifest["properties"] = parent_m["properties"]
-    if not _try_commit(fs, path, manifest):
-        raise ConcurrentWriteError(
-            f"compact prepared against v{parent} but the tip moved"
-        )
-    return manifest["version"]
+        body["properties"] = parent_m["properties"]
+    return _commit_on(be, root, (parent, parent_m), body)
 
 
 def snapshot_zorder(
@@ -1214,8 +944,8 @@ def snapshot_zorder(
     """
     if not 1 <= bits <= 16:
         raise ValueError(f"bits must be in [1, 16], got {bits}")
-    fs = _StoreFS(spark, path)
-    parent, parent_m = _resolve_tip(fs, path)
+    be, root = _log(spark, path)
+    parent, parent_m = _resolve_tip(be, root)
     if parent is None:
         return None
     if _inherited_chunk(parent_m) is not None:
@@ -1261,25 +991,14 @@ def snapshot_zorder(
         .parquet(tx)
     )
     new_files = _tx_manifest_entries(spark, path, tx)
-    target = _target_version(fs, path, parent)
-    if target is None:
-        raise ConcurrentWriteError(
-            f"zorder prepared against v{parent} but the tip moved"
-        )
-    manifest = {
-        "version": target,
-        "parent": parent,
+    body = {
         "operation": "zorder",
         "schema": parent_m.get("schema") or _schema_json(df),
         "files": new_files,
     }
     if parent_m.get("properties"):
-        manifest["properties"] = parent_m["properties"]
-    if not _try_commit(fs, path, manifest):
-        raise ConcurrentWriteError(
-            f"zorder prepared against v{parent} but the tip moved"
-        )
-    return manifest["version"]
+        body["properties"] = parent_m["properties"]
+    return _commit_on(be, root, (parent, parent_m), body)
 
 
 def snapshot_as_of(spark: SparkSession, path: str, ts: float) -> int | None:
@@ -1287,15 +1006,8 @@ def snapshot_as_of(spark: SparkSession, path: str, ts: float) -> int | None:
     commit time is <= ``ts`` (epoch seconds) — "the store as it was at
     2 a.m.". Versions without a recorded commit time (pre-round-6) are
     treated as infinitely old, i.e. always eligible."""
-    fs = _StoreFS(spark, path)
-    for v in reversed(_list_versions(fs, path)):
-        try:
-            m = _read_manifest(fs, path, v)
-        except Exception:
-            continue
-        if m.get("committed_at", float("-inf")) <= ts:
-            return v
-    return None
+    be, root = _log(spark, path)
+    return _as_of(be, root, ts)[0]
 
 
 def snapshot_clone(
@@ -1321,35 +1033,30 @@ def snapshot_clone(
 
     ``version`` clones a historical snapshot (defaults to the tip).
     ``dest`` must not already hold a committed store. Returns the clone's
-    version (always 1)."""
-    sfs = _StoreFS(spark, source)
+    version (1 on a fresh destination)."""
+    sbe, sroot = _log(spark, source)
     if version is None:
-        version, m = _resolve_tip(sfs, source)
+        version, m = _resolve_tip(sbe, sroot)
         if version is None:
             raise FileNotFoundError(f"no committed snapshot under {source}")
     else:
-        m = _read_manifest(sfs, source, version)
-    dfs = _StoreFS(spark, dest)
-    if _resolve_tip(dfs, dest)[0] is not None:
+        m = _read_manifest(sbe, sroot, version)
+    be, root = _log(spark, dest)
+    tip = _resolve_tip(be, root)
+    if tip[0] is not None:
         raise ValueError(
             f"snapshot_clone refuses: {dest} already holds a committed "
             f"store (cloning over it would orphan its history)"
         )
-    manifest = {
-        "version": 1,
-        "parent": None,
+    body = {
         "operation": "clone",
         "cloned_from": {"path": source, "version": version},
         "schema": m.get("schema"),
         "files": m["files"],
     }
     if m.get("properties"):
-        manifest["properties"] = m["properties"]
-    if not _try_commit(dfs, dest, manifest):
-        raise ConcurrentWriteError(
-            f"clone of {source} v{version} lost the v1 commit race at {dest}"
-        )
-    return 1
+        body["properties"] = m["properties"]
+    return _commit_on(be, root, tip, body)
 
 
 def snapshot_restore(spark: SparkSession, path: str, version: int) -> int:
@@ -1361,38 +1068,27 @@ def snapshot_restore(spark: SparkSession, path: str, version: int) -> int:
     time-travelable until vacuum. Raises if ``version`` is unreadable
     (never committed, or its files already vacuumed — restoring it would
     publish a tip that cannot be scanned)."""
-    fs = _StoreFS(spark, path)
-    parent, _parent_m = _resolve_tip(fs, path)
+    be, root = _log(spark, path)
+    parent, parent_m = _resolve_tip(be, root)
     if parent is None:
         raise FileNotFoundError(f"no committed snapshot under {path}")
     if version == parent:
         return parent  # restoring the tip is a no-op, not a new commit
-    if not _readable(fs, path, version):
+    if not _readable(be, root, version):
         raise ValueError(
             f"cannot restore v{version}: not committed, or its data files "
             f"were vacuumed (an unreadable tip would wedge every reader)"
         )
-    m = _read_manifest(fs, path, version)
-    target = _target_version(fs, path, parent)
-    if target is None:
-        raise ConcurrentWriteError(
-            f"restore prepared against v{parent} but the tip moved"
-        )
-    manifest = {
-        "version": target,
-        "parent": parent,
+    m = _read_manifest(be, root, version)
+    body = {
         "operation": "restore",
         "restored_version": version,
         "schema": m.get("schema"),
         "files": m["files"],
     }
     if m.get("properties"):
-        manifest["properties"] = m["properties"]
-    if not _try_commit(fs, path, manifest):
-        raise ConcurrentWriteError(
-            f"restore prepared against v{parent} but the tip moved"
-        )
-    return manifest["version"]
+        body["properties"] = m["properties"]
+    return _commit_on(be, root, (parent, parent_m), body)
 
 
 def snapshot_select(
@@ -1428,8 +1124,8 @@ def read_any_store(spark: SparkSession, path: str) -> DataFrame:
     version; anything else reads as the Hive name-partitioned swap store.
     Lets query-side code accept either store format without caring which
     maintenance protocol produced it."""
-    fs = _StoreFS(spark, path)
-    if _resolve_tip(fs, path)[0] is not None:
+    be, root = _log(spark, path)
+    if _resolve_tip(be, root)[0] is not None:
         return snapshot_read(spark, path)
     return read_store(spark, path)
 
@@ -1446,8 +1142,8 @@ def snapshot_expire(
     carry over by reference. Expiring EVERYTHING is a legal commit (the
     empty snapshot stays readable via its recorded schema). Returns the
     committed version, or None if nothing was expirable."""
-    fs = _StoreFS(spark, path)
-    parent, parent_m = _resolve_tip(fs, path)
+    be, root = _log(spark, path)
+    parent, parent_m = _resolve_tip(be, root)
     if parent is None:
         return None
     base = parent_m["files"]
@@ -1481,25 +1177,14 @@ def snapshot_expire(
         new_files = _write_data_files(
             spark, path, survivors, time_chunk_s=_inherited_chunk(parent_m)
         )
-    target = _target_version(fs, path, parent)
-    if target is None:
-        raise ConcurrentWriteError(
-            f"expire prepared against v{parent} but the tip moved"
-        )
-    manifest = {
-        "version": target,
-        "parent": parent,
+    body = {
         "operation": "expire",
         "schema": schema,
         "files": kept + new_files,
     }
     if parent_m.get("properties"):
-        manifest["properties"] = parent_m["properties"]
-    if not _try_commit(fs, path, manifest):
-        raise ConcurrentWriteError(
-            f"expire prepared against v{parent} but the tip moved"
-        )
-    return manifest["version"]
+        body["properties"] = parent_m["properties"]
+    return _commit_on(be, root, (parent, parent_m), body)
 
 
 def snapshot_delete(
@@ -1531,8 +1216,8 @@ def snapshot_delete(
             "delete is snapshot_write(mode='overwrite') of an empty "
             "frame; say that explicitly"
         )
-    fs = _StoreFS(spark, path)
-    parent, parent_m = _resolve_tip(fs, path)
+    be, root = _log(spark, path)
+    parent, parent_m = _resolve_tip(be, root)
     if parent is None:
         return None
     lo, hi = ts_range if ts_range is not None else (None, None)
@@ -1615,25 +1300,14 @@ def snapshot_delete(
                 f"(foreign/legacy data file); repair or drop that file "
                 f"before deleting. Original: {e}"
             ) from e
-    target = _target_version(fs, path, parent)
-    if target is None:
-        raise ConcurrentWriteError(
-            f"delete prepared against v{parent} but the tip moved"
-        )
-    manifest = {
-        "version": target,
-        "parent": parent,
+    body = {
         "operation": "delete",
         "schema": schema,
         "files": kept + new_files,
     }
     if parent_m.get("properties"):
-        manifest["properties"] = parent_m["properties"]
-    if not _try_commit(fs, path, manifest):
-        raise ConcurrentWriteError(
-            f"delete prepared against v{parent} but the tip moved"
-        )
-    return manifest["version"]
+        body["properties"] = parent_m["properties"]
+    return _commit_on(be, root, (parent, parent_m), body)
 
 
 def snapshot_update(
@@ -1679,8 +1353,8 @@ def snapshot_update(
             "snapshot_update needs names and/or ts_range — an unbounded "
             "update is a read-transform-overwrite; say that explicitly"
         )
-    fs = _StoreFS(spark, path)
-    parent, parent_m = _resolve_tip(fs, path)
+    be, root = _log(spark, path)
+    parent, parent_m = _resolve_tip(be, root)
     if parent is None:
         return None
     lo, hi = ts_range if ts_range is not None else (None, None)
@@ -1750,25 +1424,14 @@ def snapshot_update(
             f"the non-null key contract; fix the assignment or repair the "
             f"file. Original: {e}"
         ) from e
-    target = _target_version(fs, path, parent)
-    if target is None:
-        raise ConcurrentWriteError(
-            f"update prepared against v{parent} but the tip moved"
-        )
-    manifest = {
-        "version": target,
-        "parent": parent,
+    body = {
         "operation": "update",
         "schema": schema,
         "files": kept + new_files,
     }
     if parent_m.get("properties"):
-        manifest["properties"] = parent_m["properties"]
-    if not _try_commit(fs, path, manifest):
-        raise ConcurrentWriteError(
-            f"update prepared against v{parent} but the tip moved"
-        )
-    return manifest["version"]
+        body["properties"] = parent_m["properties"]
+    return _commit_on(be, root, (parent, parent_m), body)
 
 
 def snapshot_diff(
@@ -1800,9 +1463,9 @@ def snapshot_diff(
     two versions (under additive-only evolution that is the superset,
     so a reverse diff across an evolution sees the evolved columns and
     stays the exact label-swap of the forward diff)."""
-    fs = _StoreFS(spark, path)
-    m_from = _read_manifest(fs, path, from_version)
-    m_to = _read_manifest(fs, path, to_version)
+    be, root = _log(spark, path)
+    m_from = _read_manifest(be, root, from_version)
+    m_to = _read_manifest(be, root, to_version)
     files_from = {f["path"] for f in m_from["files"]}
     files_to = {f["path"] for f in m_to["files"]}
     only_from = sorted(files_from - files_to)
@@ -1917,10 +1580,11 @@ def snapshot_vacuum(
     if min_age_s < 0:
         raise ValueError(f"min_age_s must be >= 0, got {min_age_s}")
     fs = _StoreFS(spark, path)
-    versions = _list_versions(fs, path)
+    be, root = _log(spark, path)
+    versions = _list_versions(be, root)
     if not versions:
         return []
-    readable = [v for v in versions if _readable(fs, path, v)]
+    readable = [v for v in versions if _readable(be, root, v)]
     if not readable:
         # every manifest is torn/tampered — exactly the state readers are
         # built to survive and an operator can repair. An empty live set
@@ -1936,7 +1600,7 @@ def snapshot_vacuum(
 
     live_norm: set[str] = set()
     for v in kept_versions:
-        live_norm.update(norm(f["path"]) for f in _read_manifest(fs, path, v)["files"])
+        live_norm.update(norm(f["path"]) for f in _read_manifest(be, root, v)["files"])
     deleted: list[str] = []
     # delete only BELOW the kept floor — never a slot BETWEEN kept
     # versions (only unreadable junk can sit there): deleting it would
@@ -1955,7 +1619,7 @@ def snapshot_vacuum(
     # stale manifest temps: a writer that crashed between staging and
     # rename leaves .tmp_v*.json junk (harmless — invisible to version
     # listing — but it accumulates); reclaim it under the same age guard
-    snap_dir = f"{path}/{_SNAP_DIR}"
+    snap_dir = f"{path}/{SNAP_DIR}"
     if fs.exists(snap_dir):
         for st in fs.fs.listStatus(fs.jpath(snap_dir)):
             base = str(st.getPath()).rsplit("/", 1)[-1]
@@ -1979,11 +1643,3 @@ def snapshot_vacuum(
             if files and len(dead) == len(files):
                 fs.delete(tx)  # tx dir fully unreferenced
     return deleted
-
-
-def _readable(fs: _StoreFS, root: str, version: int) -> bool:
-    try:
-        _read_manifest(fs, root, version)
-        return True
-    except Exception:
-        return False

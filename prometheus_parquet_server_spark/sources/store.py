@@ -486,7 +486,7 @@ def upsert_store(spark: SparkSession, path: str, updates: DataFrame) -> list[str
             # and an added/missing column either breaks the union or
             # splits the store into heterogeneous partitions that later
             # full reads resolve nondeterministically
-            from prometheus_parquet_server_spark.sources.snapshot_store import (
+            from prometheus_parquet_server_spark.sources.manifest_log import (
                 _validated_append_schema,
             )
 
@@ -501,7 +501,7 @@ def upsert_store(spark: SparkSession, path: str, updates: DataFrame) -> list[str
                     fld["type"] = "string"
             _validated_append_schema(
                 recorded,
-                updates,
+                updates.schema,
                 merge_schema=False,
                 evolution_hint=(
                     "the swap store has no recorded schema to pin "

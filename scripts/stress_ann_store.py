@@ -36,8 +36,8 @@ from prometheus_parquet_server_spark.pipeline.ann_store import (
     ivf_search,
 )
 from prometheus_parquet_server_spark.pipeline.similarity import brute_force_topk
-from prometheus_parquet_server_spark.sources.snapshot_store import (
-    _StoreFS,
+from prometheus_parquet_server_spark.sources.manifest_log import (
+    _backend_for,
     _name_overlaps,
     _resolve_tip,
 )
@@ -68,8 +68,8 @@ def main() -> None:
     ivf_build(spark, store, vecs, n_centroids=k_cent, kmeans_iterations=1, dim=DIM)
     t_build = time.time() - t0
 
-    fs = _StoreFS(spark, store)
-    _, m = _resolve_tip(fs, store)
+    be = _backend_for(store)
+    _, m = _resolve_tip(be, store)
     n_files = len(m["files"])
 
     probes = vecs.limit(5).select(

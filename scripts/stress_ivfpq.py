@@ -46,10 +46,12 @@ from prometheus_parquet_server_spark.pipeline.pq import (
     ivfpq_search,
 )
 from prometheus_parquet_server_spark.sources.snapshot_store import (
-    _StoreFS,
+    snapshot_version,
+)
+from prometheus_parquet_server_spark.sources.manifest_log import (
+    _backend_for,
     _name_overlaps,
     _resolve_tip,
-    snapshot_version,
 )
 
 DIM = 64
@@ -113,8 +115,8 @@ def production_phase(spark, vecs, probes, probe_rows, twin_ids, n, n_cells):
     )
     t_build = round(time.time() - t0, 2)
 
-    fs = _StoreFS(spark, store)
-    _, manifest = _resolve_tip(fs, store)
+    be = _backend_for(store)
+    _, manifest = _resolve_tip(be, store)
     index_bytes = sum(int(f.get("n_bytes", 0)) for f in manifest["files"])
     raw_bytes = n * DIM * 8
 
@@ -236,8 +238,8 @@ def main() -> None:
     )
     t_build = round(time.time() - t0, 2)
 
-    fs = _StoreFS(spark, store)
-    _, manifest = _resolve_tip(fs, store)
+    be = _backend_for(store)
+    _, manifest = _resolve_tip(be, store)
     # a file carries cell data iff its name range overlaps the cell names
     # (range clustering can pack the reserved _coarse/_codebook rows into
     # the same file as the first cells at small scale)

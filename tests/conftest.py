@@ -1,5 +1,6 @@
 import math
 import os
+import warnings
 
 import pytest
 
@@ -175,7 +176,27 @@ SLOW_TESTS = {
 }
 
 
+def _stale_slow_entries(config, items) -> list[str]:
+    """SLOW_TESTS entries that name no collected test although their file
+    was collected in full — a renamed or deleted test whose entry would
+    otherwise drift silently (a renamed slow test lands in the fast tier).
+    Files narrowed to single node ids on the command line are not judged."""
+    collected = {item.nodeid.split("tests/")[-1] for item in items}
+    narrowed = {a.split("::")[0].split("tests/")[-1] for a in config.args if "::" in a}
+    files = {n.split("::")[0] for n in collected} - narrowed
+    return sorted(
+        t for t in SLOW_TESTS if t.split("::")[0] in files and t not in collected
+    )
+
+
+@pytest.hookimpl(tryfirst=True)  # before -k/-m deselection narrows `items`
 def pytest_collection_modifyitems(config, items):
+    stale = _stale_slow_entries(config, items)
+    if stale:
+        msg = f"conftest.SLOW_TESTS entries match no collected test: {stale}"
+        if os.environ.get("RUN_SLOW") == "1":
+            raise pytest.UsageError(msg)
+        warnings.warn(pytest.PytestWarning(msg))
     if os.environ.get("RUN_SLOW") == "1":
         return
     skip = pytest.mark.skip(

@@ -48,8 +48,8 @@ def test_store_search_equals_direct_ivf(spark, tmp_path):
 def test_search_prunes_to_probed_cells(spark, tmp_path):
     """The corpus scan's file list (manifest names-pruning) must be a
     strict subset of the index files when n_probe < n_centroids."""
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _StoreFS,
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
         _name_overlaps,
         _resolve_tip,
     )
@@ -65,8 +65,8 @@ def test_search_prunes_to_probed_cells(spark, tmp_path):
         ivf_build(spark, store, emb, n_centroids=8, kmeans_iterations=0, dim=64)
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
-    fs = _StoreFS(spark, store)
-    _, m = _resolve_tip(fs, store)
+    be = _backend_for(store)
+    _, m = _resolve_tip(be, store)
     files = m["files"]
     assert len(files) > 2, "need several files for pruning to mean anything"
 
@@ -323,10 +323,12 @@ def test_quantized_index_recall_and_size(spark, tmp_path):
     materially smaller than the float ones."""
     from prometheus_parquet_server_spark.pipeline.ann_store import ivf_append
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _StoreFS,
-        _resolve_tip,
         snapshot_properties,
         snapshot_read,
+    )
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
+        _resolve_tip,
     )
 
     emb = _emb(spark)
@@ -365,8 +367,8 @@ def test_quantized_index_recall_and_size(spark, tmp_path):
 
     # 4x storage claim: compare per-row data bytes of cell files
     def data_bytes(store):
-        fs = _StoreFS(spark, store)
-        _, m = _resolve_tip(fs, store)
+        be = _backend_for(store)
+        _, m = _resolve_tip(be, store)
         return sum(f["n_bytes"] for f in m["files"])
 
     assert data_bytes(qstore) < 0.5 * data_bytes(fstore), (

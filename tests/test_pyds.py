@@ -12,6 +12,7 @@ commits unless ignore_changes=true.
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from prometheus_parquet_server_spark.sources.pyds import (
     SnapshotBatchReader,
@@ -526,10 +527,11 @@ def test_object_store_commit_backend_single_winner():
     the registry (behavior unchanged, covered by the other tests)."""
     import threading
 
-    from prometheus_parquet_server_spark.sources.pyds import (
+    from prometheus_parquet_server_spark.sources.manifest_log import (
         CommitBackend,
-        _create_manifest_exclusive,
-        _publish_manifest,
+        _backend_for,
+        _manifest_path,
+        _publish,
         _read_manifest,
         register_commit_backend,
     )
@@ -565,28 +567,26 @@ def test_object_store_commit_backend_single_winner():
     register_commit_backend("memcas", MemStore())
     # fresh store object per test id to avoid cross-test state
     root = "memcas://bucket/store"
-    schema_json = {"type": "struct", "fields": []}
+    schema = StructType([])
 
     # (a) direct double-create on one slot: exactly one winner
-    from prometheus_parquet_server_spark.sources.pyds import _manifest_fs_path
-
-    slot = _manifest_fs_path(root + "_slot", 1)
-    assert _create_manifest_exclusive(slot, b"{}") is True
-    assert _create_manifest_exclusive(slot, b"{}") is False
+    slot = _manifest_path(root + "_slot", 1)
+    assert _backend_for(slot).create_exclusive(slot, b"{}") is True
+    assert _backend_for(slot).create_exclusive(slot, b"{}") is False
 
     # (b) 8 racing appends: all commit, distinct versions, union file list
     results, errors = [], []
 
     def publish(i):
         try:
-            v = _publish_manifest(
+            v = _publish(
+                _backend_for(root),
                 root,
                 "append",
-                schema_json,
+                schema,
                 [{"path": f"memcas://bucket/store/data/f{i}.parquet",
                   "n_rows": 1, "n_bytes": 1, "min_name": "a",
                   "max_name": "a", "min_ts": 0.0, "max_ts": 1.0}],
-                None,
             )
             results.append(v)
         except Exception as e:  # pragma: no cover - fail loudly below
@@ -599,7 +599,7 @@ def test_object_store_commit_backend_single_winner():
         t.join()
     assert not errors, errors
     assert sorted(results) == list(range(1, 9))
-    tip = _read_manifest(root, 8)
+    tip = _read_manifest(_backend_for(root), root, 8)
     committed = sorted(f["path"] for f in tip["files"])
     assert committed == sorted(
         f"memcas://bucket/store/data/f{i}.parquet" for i in range(8)
@@ -620,10 +620,13 @@ def test_s3_commit_backend_moto_race():
 
     from prometheus_parquet_server_spark.sources.pyds import (
         S3CommitBackend,
-        _manifest_fs_path,
-        _publish_manifest,
-        _read_manifest,
         register_commit_backend,
+    )
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
+        _manifest_path,
+        _publish,
+        _read_manifest,
     )
 
     with mock_aws():
@@ -633,7 +636,7 @@ def test_s3_commit_backend_moto_race():
 
         # (a) primitive: two racers on one slot — exactly one winner, the
         # loser sees S3's own 412 (not a fake), and the winner's bytes win
-        slot = _manifest_fs_path("s3://pps-test-bucket/store", 1)
+        slot = _manifest_path("s3://pps-test-bucket/store", 1)
         assert backend.create_exclusive(slot, b'{"racer": "A"}') is True
         assert backend.create_exclusive(slot, b'{"racer": "B"}') is False
         assert backend.read_bytes(slot) == b'{"racer": "A"}'
@@ -649,20 +652,20 @@ def test_s3_commit_backend_moto_race():
         # both commit, to distinct versions, the tip unions the file lists
         register_commit_backend("s3", backend)
         root = "s3://pps-test-bucket/store2"
-        schema_json = {"type": "struct", "fields": []}
+        schema = StructType([])
 
         def pub(i):
-            return _publish_manifest(
+            return _publish(
+                _backend_for(root),
                 root,
                 "append",
-                schema_json,
+                schema,
                 [{"path": f"{root}/data/f{i}.parquet", "n_rows": 1,
                   "n_bytes": 1, "min_name": "a", "max_name": "a",
                   "min_ts": 0.0, "max_ts": 1.0}],
-                None,
             )
         assert [pub(0), pub(1), pub(2)] == [1, 2, 3]
-        tip = _read_manifest(root, 3)
+        tip = _read_manifest(_backend_for(root), root, 3)
         assert sorted(f["path"] for f in tip["files"]) == [
             f"{root}/data/f{i}.parquet" for i in range(3)
         ]
@@ -759,10 +762,13 @@ def test_gcs_commit_backend_race():
     the bound."""
     from prometheus_parquet_server_spark.sources.pyds import (
         GCSCommitBackend,
-        _manifest_fs_path,
-        _publish_manifest,
-        _read_manifest,
         register_commit_backend,
+    )
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
+        _manifest_path,
+        _publish,
+        _read_manifest,
     )
 
     sess = _FakeGCSSession()
@@ -770,7 +776,7 @@ def test_gcs_commit_backend_race():
 
     # (a) primitive: one slot, two racers — exactly one winner; the
     # winner's bytes are what a read returns
-    slot = _manifest_fs_path("gs://pps-test-bucket/store", 1)
+    slot = _manifest_path("gs://pps-test-bucket/store", 1)
     assert backend.create_exclusive(slot, b'{"racer": "A"}') is True
     assert backend.create_exclusive(slot, b'{"racer": "B"}') is False
     assert backend.read_bytes(slot) == b'{"racer": "A"}'
@@ -793,21 +799,21 @@ def test_gcs_commit_backend_race():
     # listing exercises pageToken pagination (page size 2 in the stub)
     register_commit_backend("gs", backend)
     root = "gs://pps-test-bucket/store2"
-    schema_json = {"type": "struct", "fields": []}
+    schema = StructType([])
 
     def pub(i):
-        return _publish_manifest(
+        return _publish(
+            _backend_for(root),
             root,
             "append",
-            schema_json,
+            schema,
             [{"path": f"{root}/data/f{i}.parquet", "n_rows": 1,
               "n_bytes": 1, "min_name": "a", "max_name": "a",
               "min_ts": 0.0, "max_ts": 1.0}],
-            None,
         )
 
     assert [pub(0), pub(1), pub(2)] == [1, 2, 3]
-    tip = _read_manifest(root, 3)
+    tip = _read_manifest(_backend_for(root), root, 3)
     assert sorted(f["path"] for f in tip["files"]) == [
         f"{root}/data/f{i}.parquet" for i in range(3)
     ]
@@ -822,7 +828,7 @@ def test_gcs_commit_backend_race():
     # (c) a transient 429 retries through to the win; at the bound the
     # create raises instead of silently giving up
     sess.throttle_next = 2
-    slot2 = _manifest_fs_path("gs://pps-test-bucket/store", 2)
+    slot2 = _manifest_path("gs://pps-test-bucket/store", 2)
     assert backend.create_exclusive(slot2, b"{}") is True
     sess.throttle_next = 10**9
     limited = GCSCommitBackend(sess, max_conflict_retries=2)
@@ -896,10 +902,13 @@ def test_abs_commit_backend_race():
     FileNotFoundError."""
     from prometheus_parquet_server_spark.sources.pyds import (
         ABSCommitBackend,
-        _manifest_fs_path,
-        _publish_manifest,
-        _read_manifest,
         register_commit_backend,
+    )
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
+        _manifest_path,
+        _publish,
+        _read_manifest,
     )
 
     backend = ABSCommitBackend(_FakeBlobService())
@@ -909,7 +918,7 @@ def test_abs_commit_backend_race():
         "cont", "a/b",
     )
 
-    slot = _manifest_fs_path("wasbs://cont@acct.blob.core.windows.net/store", 1)
+    slot = _manifest_path("wasbs://cont@acct.blob.core.windows.net/store", 1)
     assert backend.create_exclusive(slot, b'{"racer": "A"}') is True
     assert backend.create_exclusive(slot, b'{"racer": "B"}') is False
     assert backend.read_bytes(slot) == b'{"racer": "A"}'
@@ -921,21 +930,21 @@ def test_abs_commit_backend_race():
 
     register_commit_backend("wasbs", backend)
     root = "wasbs://cont@acct.blob.core.windows.net/store2"
-    schema_json = {"type": "struct", "fields": []}
+    schema = StructType([])
 
     def pub(i):
-        return _publish_manifest(
+        return _publish(
+            _backend_for(root),
             root,
             "append",
-            schema_json,
+            schema,
             [{"path": f"{root}/data/f{i}.parquet", "n_rows": 1,
               "n_bytes": 1, "min_name": "a", "max_name": "a",
               "min_ts": 0.0, "max_ts": 1.0}],
-            None,
         )
 
     assert [pub(0), pub(1), pub(2)] == [1, 2, 3]
-    tip = _read_manifest(root, 3)
+    tip = _read_manifest(_backend_for(root), root, 3)
     assert sorted(f["path"] for f in tip["files"]) == [
         f"{root}/data/f{i}.parquet" for i in range(3)
     ]

@@ -106,11 +106,13 @@ def test_rollup_ingest_incremental_equals_one_shot(spark, tmp_path):
         rollup_read,
     )
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _resolve_tip,
         snapshot_expire,
     )
-    from prometheus_parquet_server_spark.sources.store import _StoreFS
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
+        _read_manifest,
+        _resolve_tip,
+    )
 
     rows = [
         ("click", 10.0 + 37.0 * i, float((i * 13) % 97) / 7.0) for i in range(200)
@@ -144,8 +146,8 @@ def test_rollup_ingest_incremental_equals_one_shot(spark, tmp_path):
     assert snap(inc) == want
 
     # a batch touching ONLY 'view' must carry 'click' files by reference
-    fs = _StoreFS(spark, inc)
-    _, before = _resolve_tip(fs, inc)
+    be = _backend_for(inc)
+    _, before = _resolve_tip(be, inc)
     click_files_before = {
         f["path"] for f in before["files"] if f["max_name"] <= "click"
     }
@@ -153,7 +155,7 @@ def test_rollup_ingest_incremental_equals_one_shot(spark, tmp_path):
         [("view", 100000.0, 5.0)], "event_type string, ts double, value double"
     )
     rollup_ingest(spark, inc, more)
-    _, after = _resolve_tip(fs, inc)
+    _, after = _resolve_tip(be, inc)
     assert click_files_before <= {f["path"] for f in after["files"]}
 
     # retention composes: manifest-level expire on the partial store

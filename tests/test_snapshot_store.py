@@ -60,27 +60,6 @@ def test_uncommitted_writer_is_invisible(spark, tmp_path):
     assert snapshot_read(spark, store).count() == 1
 
 
-def test_commit_race_one_winner(spark, tmp_path):
-    """Two writers racing to the same version: exactly one wins; the
-    append retries onto the new tip, the overwrite refuses."""
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _StoreFS,
-        _try_commit,
-    )
-
-    store = f"file://{tmp_path}/snap"
-    snapshot_write(spark, store, mk(spark, [("a", {}, 1.0, 1.0)]), mode="overwrite")
-    fs = _StoreFS(spark, store)
-    # steal version 2 out from under the next writer
-    m2 = {"version": 2, "parent": 1, "operation": "test", "files": []}
-    assert _try_commit(fs, store, m2)
-    # same version again → loser
-    assert not _try_commit(fs, store, m2)
-    # an append rebases: lands at v3
-    v = snapshot_write(spark, store, mk(spark, [("b", {}, 2.0, 2.0)]))
-    assert v == 3
-
-
 def test_upsert_rewrites_only_touched_files(spark, tmp_path):
     store = f"file://{tmp_path}/snap"
     snapshot_write(spark, store, mk(spark, [("a", {}, 1.0, 1.0)]), mode="overwrite")
@@ -94,14 +73,14 @@ def test_upsert_rewrites_only_touched_files(spark, tmp_path):
     }
     assert rows == {("a", 1.0): 1.0, ("b", 1.0): 99.0, ("c", 1.0): 3.0}
     # 'a' file carried over by reference: same path in v2 and v3 manifests
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
         _read_manifest,
-        _StoreFS,
     )
 
-    fs = _StoreFS(spark, store)
+    be = _backend_for(store)
     paths = lambda v: {
-        f["path"] for f in _read_manifest(fs, store, v)["files"] if f["min_name"] == "a"
+        f["path"] for f in _read_manifest(be, store, v)["files"] if f["min_name"] == "a"
     }
     assert paths(2) == paths(3) != set()
 
@@ -118,15 +97,15 @@ def test_manifest_level_file_pruning(spark, tmp_path):
     df = snapshot_read(spark, store, names=["m1"])
     assert df.count() == 5
     scanned = df.select(F.input_file_name()).distinct().collect()
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
         _read_manifest,
-        _StoreFS,
     )
 
-    fs = _StoreFS(spark, store)
+    be = _backend_for(store)
     m2_files = {
         f["path"].split("://", 1)[-1]
-        for f in _read_manifest(fs, store, 2)["files"]
+        for f in _read_manifest(be, store, 2)["files"]
         if f["min_name"] == "m2"
     }
     for r in scanned:
@@ -170,9 +149,11 @@ def test_expire_drops_whole_files_without_scan(spark, tmp_path):
     """Files entirely below the cutoff drop by manifest arithmetic; only
     straddling files are rewritten; clean files carry over by reference."""
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _StoreFS,
         snapshot_expire,
+    )
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
+        _read_manifest,
     )
 
     store = f"file://{tmp_path}/snap"
@@ -180,16 +161,16 @@ def test_expire_drops_whole_files_without_scan(spark, tmp_path):
     snapshot_write(spark, store, mk(spark, [("m", {}, float(t), 1.0) for t in range(5)]), mode="overwrite")
     snapshot_write(spark, store, mk(spark, [("m", {}, float(t), 2.0) for t in range(8, 13)]))
     snapshot_write(spark, store, mk(spark, [("m", {}, float(t), 3.0) for t in range(20, 25)]))
-    fs = _StoreFS(spark, store)
+    be = _backend_for(store)
     fresh_paths = {
-        f["path"] for f in _read_manifest(fs, store, 3)["files"] if f["min_ts"] >= 20
+        f["path"] for f in _read_manifest(be, store, 3)["files"] if f["min_ts"] >= 20
     }
 
     v = snapshot_expire(spark, store, min_ts=10.0)
     assert v == 4
     rows = sorted(r["ts"] for r in snapshot_read(spark, store).collect())
     assert rows == [10.0, 11.0, 12.0, 20.0, 21.0, 22.0, 23.0, 24.0]
-    after = _read_manifest(fs, store, 4)["files"]
+    after = _read_manifest(be, store, 4)["files"]
     # the fresh file was carried by reference, not rewritten
     assert fresh_paths <= {f["path"] for f in after}
     # nothing left to expire → no-op returns None, no empty commit
@@ -273,24 +254,24 @@ def test_read_any_store_detects_format(spark, tmp_path):
 def test_compact_rewrites_only_small_files(spark, tmp_path):
     """Files already at target size carry over by reference — compaction
     cost tracks the small-file debt, not the store size."""
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
         _read_manifest,
-        _StoreFS,
     )
 
     store = f"file://{tmp_path}/snap"
     snapshot_write(spark, store, mk(spark, [("big", {}, float(t), 1.0) for t in range(100)]), mode="overwrite")
     snapshot_write(spark, store, mk(spark, [("s1", {}, 1.0, 1.0)]))
     snapshot_write(spark, store, mk(spark, [("s2", {}, 1.0, 2.0)]))
-    fs = _StoreFS(spark, store)
-    m3 = _read_manifest(fs, store, 3)["files"]
+    be = _backend_for(store)
+    m3 = _read_manifest(be, store, 3)["files"]
     big_paths = {f["path"] for f in m3 if f["min_name"] == "big"}
     big_bytes = max(f["n_bytes"] for f in m3 if f["min_name"] == "big")
 
     # threshold between the big file and the tiny ones → only tiny rewritten
     v = snapshot_compact(spark, store, target_file_bytes=big_bytes)
     assert v == 4
-    m4 = _read_manifest(fs, store, 4)["files"]
+    m4 = _read_manifest(be, store, 4)["files"]
     assert big_paths <= {f["path"] for f in m4}  # carried by reference
     assert snapshot_read(spark, store).count() == 102
     # everything at/above target now → no-op, no empty commit
@@ -375,14 +356,14 @@ def test_snapshot_select_prunes_and_filters_exactly(spark, tmp_path):
 
 
 def _is_mem_file(spark, store, path):
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
         _read_manifest,
         _resolve_tip,
-        _StoreFS,
     )
 
-    fs = _StoreFS(spark, store)
-    _, m = _resolve_tip(fs, store)
+    be = _backend_for(store)
+    _, m = _resolve_tip(be, store)
     mem = {f["path"].split("://", 1)[-1] for f in m["files"] if f["min_name"] == "mem"}
     return path.split("://", 1)[-1] in mem
 
@@ -586,10 +567,11 @@ sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
 from prometheus_parquet_server_spark import get_spark
 from prometheus_parquet_server_spark.sources.snapshot_store import (
-    _read_manifest, _resolve_tip, _schema_json, _target_version, _try_commit,
-    _write_data_files,
+    _log, _schema_json, _write_data_files,
 )
-from prometheus_parquet_server_spark.sources.store import _StoreFS
+from prometheus_parquet_server_spark.sources.manifest_log import (
+    _resolve_tip, _target_version, _try_commit,
+)
 
 tag, store, barrier_dir = sys.argv[1], sys.argv[2], sys.argv[3]
 spark = get_spark(f"racer-{{tag}}")
@@ -597,7 +579,7 @@ df = spark.createDataFrame(
     [(f"proc-{{tag}}", {{}}, 1.0, 1.0)],
     "name string, labels map<string,string>, ts double, value double",
 )
-fs = _StoreFS(spark, store)
+be, root = _log(spark, store)
 new_files = _write_data_files(spark, store, df)
 schema = _schema_json(df)
 
@@ -615,14 +597,14 @@ attempts = 0
 version = None
 for _ in range(10):
     attempts += 1
-    parent, parent_m = _resolve_tip(fs, store)
+    parent, parent_m = _resolve_tip(be, root)
     base = parent_m["files"] if parent_m else []
-    target = _target_version(fs, store, parent)
+    target = _target_version(be, root, parent)
     if target is None:
         continue
     manifest = {{"version": target, "parent": parent, "operation": "append",
                 "schema": schema, "files": base + new_files}}
-    if _try_commit(fs, store, manifest):
+    if _try_commit(be, root, manifest):
         version = target
         break
 print(json.dumps({{"tag": tag, "version": version, "attempts": attempts}}))
@@ -669,15 +651,16 @@ def test_graded_snapshot_select_prunes_files(spark):
     )
     from prometheus_parquet_server_spark.labels import LabelMatcher
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _resolve_tip,
         snapshot_select,
     )
-    from prometheus_parquet_server_spark.sources.store import _StoreFS
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
+        _resolve_tip,
+    )
 
     store = _snapshot_store_for(spark, "/root/testdata/sf0.001")
-    fs = _StoreFS(spark, store)
-    v, m = _resolve_tip(fs, store)
+    be = _backend_for(store)
+    v, m = _resolve_tip(be, store)
     total_files = len(m["files"])
     assert total_files > 1  # pruning needs something to prune
 
@@ -735,10 +718,12 @@ def test_time_chunked_layout_prunes_ts_slices(spark, tmp_path):
     maintenance paths: appends and compaction inherit the pinned layout
     property without restating it."""
     from prometheus_parquet_server_spark.sources.snapshot_store import (
+        snapshot_properties,
+    )
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
         _read_manifest,
         _resolve_tip,
-        _StoreFS,
-        snapshot_properties,
     )
 
     rows = [
@@ -754,9 +739,9 @@ def test_time_chunked_layout_prunes_ts_slices(spark, tmp_path):
     )
 
     def planned(store, **kw):
-        fs = _StoreFS(spark, store)
-        v, m = _resolve_tip(fs, store)
-        from prometheus_parquet_server_spark.sources.snapshot_store import (
+        be = _backend_for(store)
+        v, m = _resolve_tip(be, store)
+        from prometheus_parquet_server_spark.sources.manifest_log import (
             _ts_overlaps,
         )
 
@@ -789,8 +774,8 @@ def test_time_chunked_layout_prunes_ts_slices(spark, tmp_path):
     v = snapshot_compact(spark, chunked, target_file_bytes=10**9)
     if v is not None:  # everything rewritten into chunked files again
         n_after = planned(chunked, **slice_kw)[0]
-        fs = _StoreFS(spark, chunked)
-        total = len(_read_manifest(fs, chunked, v)["files"])
+        be = _backend_for(chunked)
+        total = len(_read_manifest(be, chunked, v)["files"])
         assert n_after < total, (n_after, total)
     got2 = sorted(map(key, snapshot_read(spark, chunked, **slice_kw).collect()))
     assert got2 == want
@@ -802,6 +787,8 @@ def test_time_chunked_layout_prunes_ts_slices(spark, tmp_path):
     # neither may leave an orphaned tx dir behind (empty streaming
     # micro-batches would accumulate them until vacuum).
     def tx_dirs(store):
+        from prometheus_parquet_server_spark.sources.store import _StoreFS
+
         fs = _StoreFS(spark, store)
         data = f"{store}/data"
         if not fs.exists(data):
@@ -1221,11 +1208,13 @@ def test_zorder_content_pruning_and_history(spark, tmp_path):
     time travel still serves the pre-rewrite layout, chunked stores
     refuse."""
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _StoreFS,
-        _name_overlaps,
-        _ts_overlaps,
         snapshot_zorder,
+    )
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
+        _name_overlaps,
+        _read_manifest,
+        _ts_overlaps,
     )
 
     store = f"file://{tmp_path}/zsnap"
@@ -1242,9 +1231,9 @@ def test_zorder_content_pruning_and_history(spark, tmp_path):
             spark, store, mk(spark, batch),
             mode="overwrite" if g == 0 else "append",
         )
-    fs = _StoreFS(spark, store)
+    be = _backend_for(store)
     v1 = snapshot_version(spark, store)
-    before = _read_manifest(fs, store, v1)["files"]
+    before = _read_manifest(be, store, v1)["files"]
     assert len(before) > 4  # pruning needs something to prune
 
     def pruned(files, names=None, ts=None):
@@ -1260,7 +1249,7 @@ def test_zorder_content_pruning_and_history(spark, tmp_path):
 
     v2 = snapshot_zorder(spark, store, bits=4, target_file_bytes=2_000)
     assert v2 == v1 + 1
-    after = _read_manifest(fs, store, v2)["files"]
+    after = _read_manifest(be, store, v2)["files"]
     assert len(after) > 4
 
     # content identical
@@ -1345,10 +1334,12 @@ def test_shallow_clone_zero_copy_divergence_and_vacuum_safety(spark, tmp_path):
     never deletes source files; compaction materializes the clone away
     from source references; cloning onto an existing store refuses."""
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _StoreFS,
         snapshot_clone,
         snapshot_compact,
+    )
+    from prometheus_parquet_server_spark.sources.manifest_log import (
+        _backend_for,
+        _read_manifest,
     )
 
     src = f"file://{tmp_path}/src"
@@ -1359,8 +1350,8 @@ def test_shallow_clone_zero_copy_divergence_and_vacuum_safety(spark, tmp_path):
     dst = f"file://{tmp_path}/dst"
     assert snapshot_clone(spark, src, dst) == 1
     # zero-copy: the clone references the SOURCE's files
-    dfs = _StoreFS(spark, dst)
-    cm = _read_manifest(dfs, dst, 1)
+    be = _backend_for(dst)
+    cm = _read_manifest(be, dst, 1)
     assert all(f"{tmp_path}/src/" in f["path"] for f in cm["files"])
     assert sorted(r["name"] for r in snapshot_read(spark, dst).collect()) == [
         "a", "a", "a", "a", "b"]
@@ -1378,7 +1369,7 @@ def test_shallow_clone_zero_copy_divergence_and_vacuum_safety(spark, tmp_path):
     # compaction detaches: all clone files become clone-owned
     v = snapshot_compact(spark, dst, target_file_bytes=10**9)
     assert v is not None
-    after = _read_manifest(dfs, dst, v)
+    after = _read_manifest(be, dst, v)
     assert all(f"{tmp_path}/dst/" in f["path"] for f in after["files"])
     assert snapshot_read(spark, dst).count() == 6
 
@@ -1395,18 +1386,19 @@ def test_shallow_clone_zero_copy_divergence_and_vacuum_safety(spark, tmp_path):
 def test_maintenance_verbs_race_raise_not_overwrite(spark, tmp_path, monkeypatch):
     """zorder / restore / compact must RAISE when the tip moves between
     prepare and commit — never silently drop the interleaved commit.
-    The race is injected by advancing the tip inside _target_version
-    resolution (the same window the cross-process test exercises)."""
+    The race is injected by advancing the tip inside the commit loop's
+    _target_version (the same window the cross-process test exercises)."""
+    import prometheus_parquet_server_spark.sources.manifest_log as ml
     import prometheus_parquet_server_spark.sources.snapshot_store as ss
 
     store = f"file://{tmp_path}/race"
     snapshot_write(spark, store, mk(spark, [("a", {}, 1.0, 1.0)]), mode="overwrite")
     snapshot_write(spark, store, mk(spark, [("b", {}, 2.0, 2.0)]))
 
-    real_target = ss._target_version
+    real_target = ml._target_version
     racing = {"armed": False}
 
-    def racing_target(fs, root, parent):
+    def racing_target(be, root, parent):
         if racing["armed"]:
             # another writer lands an append between prepare and commit;
             # disarm first — the inner write resolves its own target
@@ -1414,7 +1406,7 @@ def test_maintenance_verbs_race_raise_not_overwrite(spark, tmp_path, monkeypatch
             ss.snapshot_write(
                 spark, store, mk(spark, [("z", {}, 9.0, 9.0)]), mode="append"
             )
-        return real_target(fs, root, parent)
+        return real_target(be, root, parent)
 
     for verb, call in [
         ("zorder", lambda: ss.snapshot_zorder(spark, store, bits=2)),
@@ -1422,65 +1414,15 @@ def test_maintenance_verbs_race_raise_not_overwrite(spark, tmp_path, monkeypatch
         ("compact", lambda: ss.snapshot_compact(
             spark, store, target_file_bytes=10**9)),
     ]:
-        monkeypatch.setattr(ss, "_target_version", racing_target)
+        monkeypatch.setattr(ml, "_target_version", racing_target)
         racing["armed"] = True
         try:
             with pytest.raises(ConcurrentWriteError):
                 call()
         finally:
-            monkeypatch.setattr(ss, "_target_version", real_target)
+            monkeypatch.setattr(ml, "_target_version", real_target)
         # the interleaved append survived; the store still reads
         assert snapshot_read(spark, store).count() >= 3, verb
-
-
-def test_tip_hint_fast_path_and_fallbacks(spark, tmp_path, monkeypatch):
-    """The advisory tip hint makes resolution listing-free on the happy
-    path (proven by poisoning _list_versions) and can never change WHAT
-    resolves: stale, corrupt, and missing hints all fall back."""
-    import prometheus_parquet_server_spark.sources.snapshot_store as ss
-
-    store = f"file://{tmp_path}/hint"
-    snapshot_write(spark, store, mk(spark, [("a", {}, 1.0, 1.0)]), mode="overwrite")
-    snapshot_write(spark, store, mk(spark, [("b", {}, 2.0, 2.0)]))
-    fs = ss._StoreFS(spark, store)
-
-    # hint written by the commits and pointing at the tip
-    assert ss._read_tip_hint(fs, store) == 2
-
-    # happy path never lists the manifest dir
-    def boom(*a, **kw):
-        raise AssertionError("listing reached on the hinted fast path")
-
-    monkeypatch.setattr(ss, "_list_versions", boom)
-    v, m = ss._resolve_tip(fs, store)
-    assert (v, m["version"]) == (2, 2)
-    monkeypatch.undo()
-
-    # stale hint: points at v1; probing forward still finds v2
-    ss._write_tip_hint(fs, store, 1)
-    monkeypatch.setattr(ss, "_list_versions", boom)
-    assert ss._resolve_tip(fs, store)[0] == 2
-    monkeypatch.undo()
-
-    # corrupt hint falls back to listing (and still resolves)
-    stream = fs.fs.create(fs.jpath(f"{store}/{ss._SNAP_DIR}/{ss._TIP_HINT}"), True)
-    stream.write(bytearray(b"not-a-number"))
-    stream.close()
-    assert ss._resolve_tip(fs, store)[0] == 2
-
-    # missing hint (legacy store) falls back
-    fs.delete(f"{store}/{ss._SNAP_DIR}/{ss._TIP_HINT}")
-    assert ss._resolve_tip(fs, store)[0] == 2
-
-    # hint ahead of a deleted tip manifest (external tampering) falls back
-    ss._write_tip_hint(fs, store, 7)
-    assert ss._resolve_tip(fs, store)[0] == 2
-
-    # vacuum keeps resolution working with the hint in place
-    ss._write_tip_hint(fs, store, 2)
-    snapshot_vacuum(spark, store, keep_last=1, min_age_s=0.0)
-    assert ss._resolve_tip(fs, store)[0] == 2
-    assert snapshot_read(spark, store).count() == 2
 
 
 def test_vacuum_never_gaps_slots_between_kept_versions(spark, tmp_path):
@@ -1490,7 +1432,9 @@ def test_vacuum_never_gaps_slots_between_kept_versions(spark, tmp_path):
     stop at the gap, resolving a pre-gap tip (stale reads + a forked
     commit). After vacuum, a hint stale at the junk's predecessor must
     still resolve the true tip."""
-    import prometheus_parquet_server_spark.sources.snapshot_store as ss
+    import pathlib
+
+    import prometheus_parquet_server_spark.sources.manifest_log as ml
 
     store = f"file://{tmp_path}/gap"
     for i in range(3):
@@ -1498,23 +1442,22 @@ def test_vacuum_never_gaps_slots_between_kept_versions(spark, tmp_path):
             spark, store, mk(spark, [(chr(97 + i), {}, float(i), 1.0)]),
             mode="overwrite" if i == 0 else "append",
         )  # v1, v2, v3
-    fs = ss._StoreFS(spark, store)
-    # torn junk at v4 (raw write, no temp+rename), then a real v5 commit
-    stream = fs.fs.create(fs.jpath(ss._manifest_path(store, 4)), True)
-    stream.write(bytearray(b"{torn"))
-    stream.close()
+    be = ml._backend_for(store)
+    slot = lambda v: pathlib.Path(ml._local_path(ml._manifest_path(store, v)))
+    # torn junk at v4 (raw write, no temp+link), then a real v5 commit
+    slot(4).write_bytes(b"{torn")
     v5 = snapshot_write(spark, store, mk(spark, [("e", {}, 5.0, 1.0)]))
     assert v5 == 5
 
     snapshot_vacuum(spark, store, keep_last=2, min_age_s=0.0)
     # kept = {3, 5}; junk v4 must survive; v1/v2 go
-    assert fs.exists(ss._manifest_path(store, 4))
-    assert not fs.exists(ss._manifest_path(store, 1))
-    assert not fs.exists(ss._manifest_path(store, 2))
+    assert slot(4).exists()
+    assert not slot(1).exists()
+    assert not slot(2).exists()
 
     # stale hint at v3: probe-forward must cross the junk slot to v5
-    ss._write_tip_hint(fs, store, 3)
-    assert ss._resolve_tip(fs, store)[0] == 5
+    ml._write_tip_hint(be, store, 3)
+    assert ml._resolve_tip(be, store)[0] == 5
     # and a writer parented at the resolved tip lands at 6, not a fork
     assert snapshot_write(spark, store, mk(spark, [("f", {}, 6.0, 1.0)])) == 6
 
